@@ -8,7 +8,7 @@ corpora stored as Iceberg/parquet tables of pages
 
 Layout:
   kernel/     pure per-document geometry engine (numpy; no Spark imports)
-  operators/  DataFrame-level operators (mapInPandas extraction, dedup,
+  operators/  DataFrame-level operators (mapInArrow extraction, dedup,
               similarity, text stats, evaluation)
   sources/    table catalog + deterministic synthetic page corpus
   functions/  column-level helper functions (pyspark.sql.functions based)
@@ -16,7 +16,7 @@ Layout:
   streaming/  incremental (availableNow) ingest wiring
 
 Design rule: all per-document geometry runs inside Arrow-batched
-``mapInPandas`` kernels (one Python call per batch, numpy inside); the job
+``mapInArrow`` kernels (one Python call per batch, numpy inside); the job
 graph around them is plain declarative DataFrame code that Catalyst can
 optimize (column pruning, filter pushdown, broadcast anti-joins).
 """

@@ -15,6 +15,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import List, Optional, Sequence, Tuple
 
+import numpy as np
+
 from . import boilerplate
 from .export import csv_bytes, csv_bytes_numeric, empty_csv_bytes
 from .hocr import TokenArrays, parse_dom, scan_tokens_from_dom
@@ -28,6 +30,7 @@ from .layouts import (
     infer_numeric_columns,
     merge_financial_rows,
     merge_lines_into_rows,
+    numeric_span_flags,
     postprocess_financial,
     resolve_dynamic_header,
 )
@@ -59,7 +62,13 @@ class ExtractResult:
 def _hocr_main_text(tok: TokenArrays, lines: List[Line]) -> str:
     """Engine spec: one physical line per detected line, tokens space-joined
     in x order (deterministic; the reference emits no main text)."""
-    return "\n".join(" ".join(tok.text[ln.idx].tolist()) for ln in lines)
+    words = tok.text[np.concatenate([ln.idx for ln in lines])].tolist()
+    out, pos = [], 0
+    for ln in lines:
+        end = pos + len(ln.idx)
+        out.append(" ".join(words[pos:end]))
+        pos = end
+    return "\n".join(out)
 
 
 def extract_document(
@@ -128,8 +137,13 @@ def extract_document(
         from .layouts import compute_line_spans
 
         spans_per_line = compute_line_spans(tok, lines)
-        intervals, names = infer_numeric_columns(tok, lines, spans_per_line=spans_per_line)
-        recs = assign_dynamic(tok, lines, intervals, spans_per_line=spans_per_line)
+        numeric = numeric_span_flags(spans_per_line)
+        intervals, names = infer_numeric_columns(
+            tok, lines, spans_per_line=spans_per_line, numeric=numeric
+        )
+        recs = assign_dynamic(
+            tok, lines, intervals, spans_per_line=spans_per_line, numeric=numeric
+        )
         rows = merge_financial_rows(recs)
         if not rows:
             return ExtractResult(csv=empty_csv_bytes(), **base)

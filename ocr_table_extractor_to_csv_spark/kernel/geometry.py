@@ -146,7 +146,8 @@ def percentile_linear(sorted_vals: np.ndarray, q: float) -> float:
 
     Direct lerp — identical result to np.percentile (same formula:
     idx = q/100 * (n-1); v = a[floor] + frac * (a[ceil] - a[floor])) without
-    its ~90us generic dispatch; the kernel calls this once per line.
+    its ~90us generic dispatch.  merge_line_spans evaluates the same formula
+    for every line at once.
     """
     n = sorted_vals.shape[0]
     idx = (q / 100.0) * (n - 1)
@@ -190,9 +191,8 @@ def merge_spans(
     xs1l = x1[order].tolist()
     xs2l = x2[order].tolist()
     textl = text[order].tolist()
-    # running-max right edge per session: sequential by construction, but the
-    # loop is over tokens-in-line (tiny); vectorizing would change semantics
-    # only when sessions reset the running max — keep exact.
+    # running-max right edge per session; merge_line_spans is the segmented
+    # form and falls back here when its x2 >= x1 invariant does not hold
     spans: List[Tuple[int, int, str]] = []
     s_x1 = int(xs1l[0])
     s_x2 = int(xs2l[0])
@@ -210,6 +210,97 @@ def merge_spans(
             buf = [textl[k]]
     spans.append((s_x1, s_x2, " ".join(buf).strip()))
     return spans
+
+
+def _line_gap_quantiles(
+    x1: np.ndarray, x2: np.ndarray, line_of: np.ndarray, line_start: np.ndarray,
+    n_lines: int, q: float = 95.0,
+) -> np.ndarray:
+    """line_gap_quantile of every line at once over x1-sorted, concatenated
+    lines: positive in-line gaps sorted per line, then percentile_linear's
+    float64 formula and int() truncation per line."""
+    gaps = x1[1:] - x2[:-1]
+    ok = (gaps > 0) & ~line_start[1:]
+    gl = line_of[1:][ok]
+    gv = gaps[ok].astype(np.float64)
+    gv = gv[np.lexsort((gv, gl))]
+    cnt = np.bincount(gl, minlength=n_lines)
+    out = np.full(n_lines, 18, dtype=np.int64)
+    has = cnt > 0
+    if has.any():
+        m = cnt[has]
+        idx = (q / 100.0) * (m - 1)
+        lo = idx.astype(np.int64)
+        hi = np.minimum(lo + 1, m - 1)
+        frac = idx - lo
+        base = (np.cumsum(cnt) - cnt)[has]
+        a = gv[base + lo]
+        p = a + frac * (gv[base + hi] - a)
+        out[has] = np.maximum(12, p.astype(np.int64))
+    return out
+
+
+def merge_line_spans(
+    text: np.ndarray,
+    x1: np.ndarray,
+    x2: np.ndarray,
+    counts: Sequence[int],
+    max_gap_px: Optional[int] = None,
+) -> List[List[Tuple[int, int, str]]]:
+    """Span-merge many lines in one segmented pass: per line, exactly
+    ``merge_spans(text, x1, x2, gap)`` with ``gap = max_gap_px``, or the
+    line's own ``line_gap_quantile(x1, x2)`` when ``max_gap_px`` is None.
+
+    Input is the lines' tokens concatenated, ``counts[i]`` tokens for line i,
+    each line already x1-sorted (stable).
+
+    Invariant: the session edge used here is the running max of x2 over the
+    whole line (``np.maximum.accumulate``, offset by line index so it resets
+    per line), while merge_spans resets it per session.  The two agree when
+    every token has x2 >= x1 (and gap >= 0; the quantile gap is >= 12, the
+    financial one 18): a break needs ``t.x1 > edge + gap`` and the new
+    session's first x2 >= t.x1 then already exceeds the old edge.  A document
+    with any x2 < x1 token, or whose offset (coordinate span x lines) would
+    overflow int64, takes the scalar per-line path instead."""
+    n_lines = len(counts)
+    n = len(x1)
+    if n == 0:
+        return [[] for _ in range(n_lines)]
+    lo = int(x1.min())
+    width = int(x2.max()) - lo + 1  # bounds every coordinate when x2 >= x1
+    if (x2 < x1).any() or width * (n_lines + 1) >= 2**63:
+        out, pos = [], 0
+        for c in counts:
+            s1, s2 = x1[pos : pos + c], x2[pos : pos + c]
+            gap = line_gap_quantile(s1, s2) if max_gap_px is None else max_gap_px
+            out.append(merge_spans(text[pos : pos + c], s1, s2, gap))
+            pos += c
+        return out
+
+    counts = np.asarray(counts, dtype=np.int64)
+    line_of = np.repeat(np.arange(n_lines), counts)
+    line_start = np.cumsum(counts) - counts
+    brk = np.zeros(n, dtype=bool)
+    brk[line_start[counts > 0]] = True
+    if max_gap_px is None:
+        gap = _line_gap_quantiles(x1, x2, line_of, brk, n_lines)[line_of[1:]]
+    else:
+        gap = max_gap_px
+    off = line_of * width
+    edge = np.maximum.accumulate(x2 - lo + off) - off + lo
+    brk[1:] |= x1[1:] - edge[:-1] > gap
+    starts = np.flatnonzero(brk)
+    ends = np.append(starts[1:], n)
+    textl = text.tolist()
+    spans = [
+        (a, b, " ".join(textl[s:e]).strip())
+        for a, b, s, e in zip(
+            x1[starts].tolist(), edge[ends - 1].tolist(), starts.tolist(), ends.tolist()
+        )
+    ]
+    # every line start is a span start: each line's first span by search
+    bounds = np.searchsorted(starts, line_start).tolist() + [len(spans)]
+    return [spans[b0:b1] for b0, b1 in zip(bounds, bounds[1:])]
 
 
 # --------------------------------------------------------------------------

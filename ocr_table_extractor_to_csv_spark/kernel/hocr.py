@@ -19,8 +19,11 @@ Behavioral parity with the reference scan (parser.py:7-62, structures.py:8-24):
     ``page_{p}_line_{i+1}`` where ``i`` is the line's document-order index —
     lines without a parsable bbox still consume an index (parser.py:33-58).
 
-Output is columnar (struct-of-arrays), not per-token objects: the Spark
-kernel keeps every downstream pass vectorized over numpy arrays.
+The scan runs once per document: one pass over the nodes collects only raw
+titles, texts and line ids; every bbox is then parsed in bulk, the crop and
+blank-text drop are masks, and the word->line containment is a vectorized
+first match.  Output is columnar (struct-of-arrays), not per-token objects:
+the Spark kernel keeps every downstream pass vectorized over numpy arrays.
 """
 
 from __future__ import annotations
@@ -35,6 +38,14 @@ import numpy as np
 
 BBOX_RE = re.compile(r"bbox (\d+)\s+(\d+)\s+(\d+)\s+(\d+)")
 
+# bulk title check: every title exactly "bbox d d d d", <= 18 ASCII digits
+# per number (always fits int64), each title followed by the separator
+_TITLE_SEP = "\x00"
+_BBOX_LIST_RE = re.compile(r"(?:bbox [0-9]{1,18} [0-9]{1,18} [0-9]{1,18} [0-9]{1,18}\x00)*")
+
+# cells per chunk of the words x lines containment test
+_CONTAIN_CELLS = 1 << 18
+
 # HTML void elements (no closing tag) for the fallback parser.
 _VOID = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
@@ -42,25 +53,11 @@ _VOID = frozenset(
 
 
 def parse_title_bbox(title: Optional[str]) -> Optional[Tuple[int, int, int, int]]:
-    """structures.py:8-15 — regex *search*, ints, None when absent.
-
-    Fast path: the overwhelmingly common title is exactly
-    ``bbox x1 y1 x2 y2`` — a split + isdigit check avoids the regex engine
-    (~10% of total scan time at 40k tokens/doc); anything else (prefixes,
-    trailing x_wconf, weird whitespace) falls back to the regex, so the
-    accepted language is IDENTICAL."""
+    """structures.py:8-15 — regex *search*, ints, None when absent.  The
+    scan's bulk path (:func:`_title_boxes`) accepts a subset of this
+    language and sends every other document here."""
     if not title:
         return None
-    if title.startswith("bbox "):
-        parts = title[5:].split(" ")
-        if (
-            len(parts) == 4
-            and parts[0].isdecimal()
-            and parts[1].isdecimal()
-            and parts[2].isdecimal()
-            and parts[3].isdecimal()
-        ):
-            return int(parts[0]), int(parts[1]), int(parts[2]), int(parts[3])
     m = BBOX_RE.search(title)
     if not m:
         return None
@@ -213,26 +210,68 @@ def scan_tokens(
     return scan_tokens_from_dom(root, table_bbox)
 
 
+def _title_boxes(titles: List[str]) -> Tuple[np.ndarray, np.ndarray]:
+    """All bbox titles of one document -> ``(boxes (n, 4), valid (n,))``.
+
+    Bulk path: the titles joined on NUL pass one ASCII regex requiring each
+    to be exactly ``bbox d d d d`` (<= 18 digits, so int64 never overflows)
+    and one ``np.fromstring`` converts every number.  NUL cannot occur in an
+    XML attribute; an HTML-fallback title holding one yields more than 4
+    numbers per title and is caught by the count check.  Any other title
+    sends the whole document through
+    :func:`parse_title_bbox`, so the accepted language is that function's
+    (``; x_wconf`` suffixes, non-ASCII digits, ...).  Boxes whose ints do not
+    fit int64 are kept as Python ints (object dtype): the caller's final
+    int64 cast then raises for a KEPT token only, as the scalar scan did."""
+    joined = _TITLE_SEP.join(titles) + _TITLE_SEP
+    if _BBOX_LIST_RE.fullmatch(joined):
+        body = joined.replace("bbox ", "").replace(_TITLE_SEP, " ")
+        nums = np.fromstring(body, dtype=np.int64, sep=" ")
+        if nums.size == 4 * len(titles):
+            return nums.reshape(-1, 4), np.ones(len(titles), dtype=bool)
+    parsed = [parse_title_bbox(t) for t in titles]
+    valid = np.asarray([bb is not None for bb in parsed], dtype=bool)
+    boxes = [bb or (0, 0, 0, 0) for bb in parsed]
+    try:
+        return np.asarray(boxes, dtype=np.int64).reshape(-1, 4), valid
+    except OverflowError:
+        return np.asarray(boxes, dtype=object).reshape(-1, 4), valid
+
+
+def _first_containing(words: np.ndarray, lines: np.ndarray) -> np.ndarray:
+    """Index of the first row of ``lines`` whose box contains each row of
+    ``words`` (inclusive edges), -1 when none.  The words x lines test runs
+    in chunks of at most ``_CONTAIN_CELLS`` cells, so a giant page never
+    allocates the full matrix."""
+    out = np.empty(len(words), dtype=np.int64)
+    step = max(1, _CONTAIN_CELLS // len(lines))
+    L = lines.T[:, None, :]
+    for s in range(0, len(words), step):
+        W = words[s : s + step].T[:, :, None]
+        inside = (W[0] >= L[0]) & (W[1] >= L[1]) & (W[2] <= L[2]) & (W[3] <= L[3])
+        first = inside.argmax(axis=1)
+        hit = inside[np.arange(len(first)), first]
+        out[s : s + step] = np.where(hit, first, -1)
+    return out
+
+
 def scan_tokens_from_dom(
     root: _Node, table_bbox: Optional[Tuple[int, int, int, int]] = None
 ) -> TokenArrays:
+    # one pass over each page's nodes collects raw titles/texts/ids only;
+    # bboxes, the crop, the blank-text drop and the word->line containment
+    # then run once per document over arrays
     texts: List[str] = []
-    pages: List[int] = []
-    boxes: List[Tuple[int, int, int, int]] = []
-    line_ids: List[Optional[str]] = []
+    titles: List[str] = []  # word titles, then (appended below) line titles
+    word_ends: List[int] = []  # len(texts) after each page
+    line_ids: List[str] = []
+    line_titles: List[str] = []
+    line_pages: List[int] = []
 
     page_nodes = [n for n in root.iter() if "ocr_page" in (n.get("class") or "")]
+    is_et = root.__class__ is not _Node
+    add_title, add_text = titles.append, texts.append
     for pi, page in enumerate(page_nodes, start=1):
-        # ONE fused pass over descendants dispatching on class.  Word
-        # geometry/text are resolved INLINE; only the word->line
-        # containment is deferred to a post-pass (a word may sit inside a
-        # line that appears later in document order, so line_boxes must be
-        # complete first) — semantics identical to the old two-pass scan
-        # (a node carrying both classes keeps both roles), but the word
-        # nodes are touched once, not collected and re-walked (r5 pass:
-        # drops the intermediate node list + second loop dispatch).
-        line_boxes: List[Tuple[str, Tuple[int, int, int, int]]] = []
-        page_words: List[Tuple[str, Tuple[int, int, int, int]]] = []
         li = 0
         it = page.iter()
         next(it)  # page.iter() yields the page node itself first
@@ -240,91 +279,62 @@ def scan_tokens_from_dom(
             cls = n.get("class")
             if not cls:
                 continue
+            # a node carrying both classes keeps both roles
             if "ocr_line" in cls:
-                lid = n.get("id") or f"page_{pi}_line_{li + 1}"
+                # lines without a parsable bbox still consume an index
                 li += 1
-                # inlined parse_title_bbox fast path (call overhead is ~1/3
-                # of its cost at 40k tokens/doc); slow path falls back to
-                # the function, so the accepted language is IDENTICAL
-                title = n.get("title", "")
-                if title and title.startswith("bbox "):
-                    parts = title[5:].split(" ")
-                    if (
-                        len(parts) == 4
-                        and parts[0].isdecimal()
-                        and parts[1].isdecimal()
-                        and parts[2].isdecimal()
-                        and parts[3].isdecimal()
-                    ):
-                        lb = (int(parts[0]), int(parts[1]), int(parts[2]), int(parts[3]))
-                    else:
-                        lb = parse_title_bbox(title)
-                else:
-                    lb = parse_title_bbox(title)
-                if lb:
-                    line_boxes.append((lid, lb))
+                line_ids.append(n.get("id") or f"page_{pi}_line_{li}")
+                line_titles.append(n.get("title") or "")
+                line_pages.append(pi)
             if "ocrx_word" in cls:
-                title = n.get("title", "")
-                if title and title.startswith("bbox "):
-                    parts = title[5:].split(" ")
-                    if (
-                        len(parts) == 4
-                        and parts[0].isdecimal()
-                        and parts[1].isdecimal()
-                        and parts[2].isdecimal()
-                        and parts[3].isdecimal()
-                    ):
-                        bb = (int(parts[0]), int(parts[1]), int(parts[2]), int(parts[3]))
-                    else:
-                        bb = parse_title_bbox(title)
-                else:
-                    bb = parse_title_bbox(title)
-                if not bb:
-                    continue
-                if table_bbox is not None:
-                    X1, Y1, X2, Y2 = table_bbox
-                    if not (
-                        bb[0] >= X1 and bb[1] >= Y1 and bb[2] <= X2 and bb[3] <= Y2
-                    ):
-                        continue
+                add_title(n.get("title") or "")
                 # childless fast path (the normal hOCR word shape) avoids
                 # the itertext generator; identical to the join for 0 kids
-                if n.__class__ is not _Node and len(n) == 0:
-                    text = (n.text or "").strip()
+                if is_et and not len(n):
+                    add_text((n.text or "").strip())
                 else:
-                    text = "".join(n.itertext()).strip()
-                if not text:
-                    continue
-                page_words.append((text, bb))
+                    add_text("".join(n.itertext()).strip())
+        word_ends.append(len(texts))
 
-        if line_boxes:
-            for text, bb in page_words:
-                x1, y1, x2, y2 = bb
-                lid_hit: Optional[str] = None
-                for lid, (Lx1, Ly1, Lx2, Ly2) in line_boxes:
-                    if x1 >= Lx1 and y1 >= Ly1 and x2 <= Lx2 and y2 <= Ly2:
-                        lid_hit = lid
-                        break
-                texts.append(text)
-                pages.append(pi)
-                boxes.append(bb)
-                line_ids.append(lid_hit)
-        else:
-            for text, bb in page_words:
-                texts.append(text)
-                pages.append(pi)
-                boxes.append(bb)
-                line_ids.append(None)
-
-    if not texts:
+    nw = len(texts)
+    if nw == 0:
         return TokenArrays.empty()
-    box_arr = np.asarray(boxes, dtype=np.int64)
+    titles += line_titles
+    boxes, valid = _title_boxes(titles)
+    wb = boxes[:nw]
+    text = np.asarray(texts, dtype=object)
+    keep = (text != "") & valid[:nw]
+    if table_bbox is not None:
+        X1, Y1, X2, Y2 = table_bbox
+        keep &= (wb[:, 0] >= X1) & (wb[:, 1] >= Y1) & (wb[:, 2] <= X2) & (wb[:, 3] <= Y2)
+    if not keep.any():
+        return TokenArrays.empty()
+    page = np.searchsorted(word_ends, np.flatnonzero(keep), side="right") + 1
+    wb = wb[keep]
+
+    line_id = np.full(len(page), None, dtype=object)
+    if line_ids:
+        lb = boxes[nw:]
+        lpage = np.asarray(line_pages, dtype=np.int64)
+        lkeep = valid[nw:]
+        ids = np.asarray(line_ids + [None], dtype=object)
+        # words and lines are both in page order: match page by page against
+        # that page's lines in document order; -1 (no line) picks the None
+        for p in np.unique(lpage[lkeep]).tolist():
+            w_lo, w_hi = np.searchsorted(page, [p, p + 1])
+            if w_lo == w_hi:
+                continue
+            on_page = np.flatnonzero((lpage == p) & lkeep)
+            hit = _first_containing(wb[w_lo:w_hi], lb[on_page])
+            line_id[w_lo:w_hi] = ids[np.where(hit >= 0, on_page[hit], -1)]
+
+    wb = np.asarray(wb, dtype=np.int64)  # OverflowError for a kept huge coordinate
     return TokenArrays(
-        text=np.asarray(texts, dtype=object),
-        page=np.asarray(pages, dtype=np.int64),
-        x1=box_arr[:, 0],
-        y1=box_arr[:, 1],
-        x2=box_arr[:, 2],
-        y2=box_arr[:, 3],
-        line_id=np.asarray(line_ids, dtype=object),
+        text=text[keep],
+        page=page,
+        x1=wb[:, 0],
+        y1=wb[:, 1],
+        x2=wb[:, 2],
+        y2=wb[:, 3],
+        line_id=line_id,
     )

@@ -19,8 +19,7 @@ import numpy as np
 
 from .geometry import (
     coerce_interval_count,
-    line_gap_quantile,
-    merge_spans,
+    merge_line_spans,
     nearest_interval_by_edges,
     nearest_interval_inside_zero,
     percentile_linear,
@@ -91,15 +90,6 @@ class Rec:
     cells: List[str]
     num_count: int = 0
     has_label: bool = False
-
-
-def _line_spans(tok: TokenArrays, line: Line, max_gap_px: Optional[int] = None):
-    """Span-merge one line; gap defaults to the line's own P95 quantile."""
-    x1 = tok.x1[line.idx]
-    x2 = tok.x2[line.idx]
-    if max_gap_px is None:
-        max_gap_px = line_gap_quantile(x1, x2)
-    return merge_spans(tok.text[line.idx], x1, x2, max_gap_px)
 
 
 # ===========================================================================
@@ -261,8 +251,7 @@ def assign_financial_three_columns(tok: TokenArrays, lines: List[Line]) -> List[
     """Two rightmost numeric spans -> value columns; every text span joins
     the label (assign_financial.py:41-93).  Span gap is FIXED at 18px."""
     recs: List[Rec] = []
-    for ln in lines:
-        spans = _line_spans(tok, ln, max_gap_px=18)
+    for ln, spans in zip(lines, compute_line_spans(tok, lines, max_gap_px=18)):
         if not spans:
             recs.append(Rec(ln.page, ln.y1, ln.y2, ["", "", ""]))
             continue
@@ -358,11 +347,26 @@ def postprocess_financial(
 # ===========================================================================
 
 
-def compute_line_spans(tok: TokenArrays, lines: List[Line]):
-    """Quantile-gap span merge per line, computed ONCE and shared by the
-    whole dynamic path (the reference recomputes it in three places with
-    identical inputs: column_model.py:104, :62, assign_dynamic.py:55)."""
-    return [_line_spans(tok, ln) for ln in lines]
+def compute_line_spans(
+    tok: TokenArrays, lines: List[Line], max_gap_px: Optional[int] = None
+) -> List[List[Tuple[int, int, str]]]:
+    """Span merge of every line in one segmented pass
+    (geometry.merge_line_spans).  With the default per-line quantile gap it
+    runs ONCE and is shared by the whole dynamic path (the reference
+    recomputes it in three places with identical inputs: column_model.py:104,
+    :62, assign_dynamic.py:55); the financial path passes its fixed gap."""
+    if not lines:
+        return []
+    idx = np.concatenate([ln.idx for ln in lines])  # each line x1-sorted
+    return merge_line_spans(
+        tok.text[idx], tok.x1[idx], tok.x2[idx], [len(ln.idx) for ln in lines], max_gap_px
+    )
+
+
+def numeric_span_flags(spans_per_line) -> List[List[bool]]:
+    """is_numeric_span_dynamic of every span, evaluated once and shared by
+    infer_numeric_columns and assign_dynamic."""
+    return [[is_numeric_span_dynamic(s[2]) for s in spans] for spans in spans_per_line]
 
 
 def infer_numeric_columns(
@@ -372,6 +376,7 @@ def infer_numeric_columns(
     cut_quantile: float = 90.0,
     pad_px: int = 24,
     spans_per_line=None,
+    numeric=None,
 ) -> Tuple[List[Tuple[int, int]], Optional[List[str]]]:
     """Hybrid column model (column_model.py:84-201): modal numeric-span
     count over the bottom 70% picks K<=4 columns; per-position (rightmost,
@@ -383,11 +388,11 @@ def infer_numeric_columns(
 
     if spans_per_line is None:
         spans_per_line = compute_line_spans(tok, lines)
+    if numeric is None:
+        numeric = numeric_span_flags(spans_per_line)
     per_line: List[List[int]] = []
-    for spans in spans_per_line:
-        centers = [
-            int((x1 + x2) // 2) for (x1, x2, txt) in spans if is_numeric_span_dynamic(txt)
-        ]
+    for spans, flags in zip(spans_per_line, numeric):
+        centers = [int((x1 + x2) // 2) for (x1, x2, _t), f in zip(spans, flags) if f]
         centers.sort()
         per_line.append(centers)
     ys = [ln.y1 for ln in lines]
@@ -495,23 +500,26 @@ def assign_dynamic(
     lines: List[Line],
     numeric_columns: List[Tuple[int, int]],
     spans_per_line=None,
+    numeric=None,
 ) -> List[Rec]:
     """assign_dynamic.py:38-72: label = text spans left of the first numeric
     column only; numeric spans fill nearest column FIRST-WINS."""
     recs: List[Rec] = []
     if not numeric_columns:
         for ln in lines:
-            label = " ".join(tok.text[i] for i in ln.idx)  # idx already x1-sorted
+            label = " ".join(tok.text[ln.idx].tolist())  # idx already x1-sorted
             recs.append(Rec(ln.page, ln.y1, ln.y2, [label], num_count=0))
         return recs
 
     if spans_per_line is None:
         spans_per_line = compute_line_spans(tok, lines)
+    if numeric is None:
+        numeric = numeric_span_flags(spans_per_line)
     cols = sorted(numeric_columns, key=lambda ab: ab[0])
     first_L = cols[0][0]
-    for ln, spans in zip(lines, spans_per_line):
-        nums = [s for s in spans if is_numeric_span_dynamic(s[2])]
-        texts = [s for s in spans if not is_numeric_span_dynamic(s[2])]
+    for ln, spans, flags in zip(lines, spans_per_line, numeric):
+        nums = [s for s, f in zip(spans, flags) if f]
+        texts = [s for s, f in zip(spans, flags) if not f]
         label = " ".join(txt for (x1, _x2, txt) in texts if x1 < first_L).strip()
         values = [""] * len(cols)
         for (x1, x2, txt) in nums:

@@ -9,9 +9,9 @@ Usage for an adjacent A/B:
     python tools/kernel_ab.py          # side B (current tree)
     git stash && python tools/kernel_ab.py && git stash pop   # side A
 
-The digest covers every document's CSV bytes and header — if it changes
-between A and B, the optimization changed semantics and the rate delta is
-meaningless.  Interleave runs (B A B) when the host is noisy; this box's
+The digest covers every field the fixture goldens pin — csv, csv_numeric,
+main_text, n_rows, n_cols — plus error; if it changes between A and B, the
+optimization changed semantics and the rate delta is meaningless.  Interleave runs (B A B) when the host is noisy; this box's
 throughput weather is ±40% over minutes (BENCH.md header).
 """
 
@@ -48,8 +48,15 @@ def main(per_family: int = 24, trials: int = 3) -> None:
     h = hashlib.sha256()
     for html, layout, args in docs:
         r = extract_document(html, layout=layout, **args)
-        h.update(r.csv or b"")
-        h.update(str(r.header).encode())
+        # length-prefixed fields, so bytes cannot shift between them
+        for part in (
+            r.csv or b"",
+            b"-" if r.csv_numeric is None else b"+" + r.csv_numeric,
+            r.main_text.encode(),
+            f"{r.n_rows},{r.n_cols},{r.error!r}".encode(),
+        ):
+            h.update(len(part).to_bytes(8, "little"))
+            h.update(part)
     print(f"digest: {h.hexdigest()[:16]}")
 
     best = 0.0
