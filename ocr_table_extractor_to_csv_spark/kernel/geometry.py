@@ -11,6 +11,7 @@ column_model.py:13-45, assign_financial.py:20-39, assign.py:16-24.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import List, Optional, Sequence, Tuple
 
 import numpy as np
@@ -240,67 +241,116 @@ def _line_gap_quantiles(
     return out
 
 
+@dataclass
+class Spans:
+    """Spans of many lines, columnar: line ``i`` owns spans
+    ``start[i]:start[i + 1]``, each ``(x1, x2, text)`` as merge_spans
+    returns them."""
+
+    x1: np.ndarray  # int64
+    x2: np.ndarray  # int64, the session's running-max right edge
+    text: List[str]
+    start: np.ndarray  # number of lines + 1 offsets
+
+    def lists(self) -> List[List[Tuple[int, int, str]]]:
+        spans = list(zip(self.x1.tolist(), self.x2.tolist(), self.text))
+        b = self.start.tolist()
+        return [spans[i:j] for i, j in zip(b, b[1:])]
+
+    @staticmethod
+    def from_lists(per_line: List[List[Tuple[int, int, str]]]) -> "Spans":
+        flat = [s for spans in per_line for s in spans]
+        start = np.zeros(len(per_line) + 1, dtype=np.int64)
+        np.cumsum([len(spans) for spans in per_line], out=start[1:])
+        return Spans(
+            np.asarray([s[0] for s in flat], dtype=np.int64),
+            np.asarray([s[1] for s in flat], dtype=np.int64),
+            [s[2] for s in flat],
+            start,
+        )
+
+
 def merge_line_spans(
     text: np.ndarray,
     x1: np.ndarray,
     x2: np.ndarray,
     counts: Sequence[int],
     max_gap_px: Optional[int] = None,
-) -> List[List[Tuple[int, int, str]]]:
+    doc: Optional[np.ndarray] = None,
+) -> Spans:
     """Span-merge many lines in one segmented pass: per line, exactly
     ``merge_spans(text, x1, x2, gap)`` with ``gap = max_gap_px``, or the
     line's own ``line_gap_quantile(x1, x2)`` when ``max_gap_px`` is None.
 
     Input is the lines' tokens concatenated, ``counts[i]`` tokens for line i,
-    each line already x1-sorted (stable).
+    each line already x1-sorted (stable); ``doc[i]`` is line i's document
+    (all one document when None).
 
     Invariant: the session edge used here is the running max of x2 over the
-    whole line (``np.maximum.accumulate``, offset by line index so it resets
-    per line), while merge_spans resets it per session.  The two agree when
-    every token has x2 >= x1 (and gap >= 0; the quantile gap is >= 12, the
-    financial one 18): a break needs ``t.x1 > edge + gap`` and the new
-    session's first x2 >= t.x1 then already exceeds the old edge.  A document
-    with any x2 < x1 token, or whose offset (coordinate span x lines) would
-    overflow int64, takes the scalar per-line path instead."""
-    n_lines = len(counts)
-    n = len(x1)
-    if n == 0:
-        return [[] for _ in range(n_lines)]
-    lo = int(x1.min())
-    width = int(x2.max()) - lo + 1  # bounds every coordinate when x2 >= x1
-    if (x2 < x1).any() or width * (n_lines + 1) >= 2**63:
-        out, pos = [], 0
-        for c in counts:
-            s1, s2 = x1[pos : pos + c], x2[pos : pos + c]
-            gap = line_gap_quantile(s1, s2) if max_gap_px is None else max_gap_px
-            out.append(merge_spans(text[pos : pos + c], s1, s2, gap))
-            pos += c
-        return out
-
+    whole line (``np.maximum.accumulate``, each line's values shifted above
+    every earlier line's so the max never crosses lines), while merge_spans
+    resets it per session.  The two agree when every token has x2 >= x1 (and
+    gap >= 0; the quantile gap is >= 12, the financial one 18): a break needs
+    ``t.x1 > edge + gap`` and the new session's first x2 >= t.x1 then
+    already exceeds the old edge.  A document with any x2 < x1 token, or
+    whose line widths sum past its share of int64 (so the batch's shifts
+    cannot overflow), takes the scalar per-line path instead."""
     counts = np.asarray(counts, dtype=np.int64)
+    n_lines, n = len(counts), len(x1)
+    if n == 0:
+        return Spans(x1[:0], x2[:0], [], np.zeros(n_lines + 1, dtype=np.int64))
+    doc = np.zeros(n_lines, dtype=np.int64) if doc is None else doc
     line_of = np.repeat(np.arange(n_lines), counts)
     line_start = np.cumsum(counts) - counts
+    full = np.flatnonzero(counts)
+    # per line: x1 of the first (smallest) token and the largest x2
+    lo = np.zeros(n_lines, dtype=np.int64)
+    hi = np.zeros(n_lines, dtype=np.int64)
+    lo[full] = x1[line_start[full]]
+    hi[full] = np.maximum.reduceat(x2, line_start[full])
+    n_docs = int(doc.max()) + 1
+    width = hi.astype(np.float64) - lo + 1
+    bad = np.bincount(doc, weights=width, minlength=n_docs) >= 2.0**62 / n_docs
+    bad[doc[line_of[x2 < x1]]] = True
+    if bad.any():
+        scalar = bad[doc]
+        seg_tok = ~scalar[line_of]
+        seg = iter(merge_line_spans(
+            text[seg_tok], x1[seg_tok], x2[seg_tok], counts[~scalar], max_gap_px
+        ).lists())
+        out, pos = [], 0
+        for c, sc in zip(counts.tolist(), scalar.tolist()):
+            if sc:
+                s1, s2 = x1[pos : pos + c], x2[pos : pos + c]
+                gap = line_gap_quantile(s1, s2) if max_gap_px is None else max_gap_px
+                out.append(merge_spans(text[pos : pos + c], s1, s2, gap))
+            else:
+                out.append(next(seg))
+            pos += c
+        return Spans.from_lists(out)
+
     brk = np.zeros(n, dtype=bool)
-    brk[line_start[counts > 0]] = True
+    brk[line_start[full]] = True
     if max_gap_px is None:
         gap = _line_gap_quantiles(x1, x2, line_of, brk, n_lines)[line_of[1:]]
     else:
         gap = max_gap_px
-    off = line_of * width
-    edge = np.maximum.accumulate(x2 - lo + off) - off + lo
+    # line i's values lie in [shift[i], shift[i] + width[i])
+    w = hi - lo + 1
+    shift = (np.cumsum(w) - w - lo)[line_of]
+    edge = np.maximum.accumulate(x2 + shift) - shift
     brk[1:] |= x1[1:] - edge[:-1] > gap
     starts = np.flatnonzero(brk)
     ends = np.append(starts[1:], n)
     textl = text.tolist()
-    spans = [
-        (a, b, " ".join(textl[s:e]).strip())
-        for a, b, s, e in zip(
-            x1[starts].tolist(), edge[ends - 1].tolist(), starts.tolist(), ends.tolist()
-        )
-    ]
     # every line start is a span start: each line's first span by search
-    bounds = np.searchsorted(starts, line_start).tolist() + [len(spans)]
-    return [spans[b0:b1] for b0, b1 in zip(bounds, bounds[1:])]
+    start = np.searchsorted(starts, np.append(line_start, n))
+    return Spans(
+        x1[starts],
+        edge[ends - 1],
+        [" ".join(textl[s:e]).strip() for s, e in zip(starts.tolist(), ends.tolist())],
+        start,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -325,9 +375,11 @@ def nearest_interval_by_edges(xc: float, intervals: Sequence[Tuple[int, int]]) -
 
 
 def nearest_interval_inside_zero(xc: float, intervals: Sequence[Tuple[int, int]]) -> int:
-    """Distance 0 when inside else min edge distance; argmin
-    (assign_dynamic.py:63-67, column_model.py:66-67)."""
+    """Distance 0 when inside else min edge distance; argmin, ties -> lowest
+    index (assign_dynamic.py:63-67, column_model.py:66-67).  ``min`` over
+    the exact Python distances is np.argmin's first minimum without its
+    per-call array conversion."""
     dists = [
         0 if (L <= xc <= R) else min(abs(xc - L), abs(xc - R)) for (L, R) in intervals
     ]
-    return int(np.argmin(dists))
+    return min(range(len(dists)), key=dists.__getitem__)

@@ -19,31 +19,38 @@ Behavioral parity with the reference scan (parser.py:7-62, structures.py:8-24):
     ``page_{p}_line_{i+1}`` where ``i`` is the line's document-order index —
     lines without a parsable bbox still consume an index (parser.py:33-58).
 
-The scan runs once per document: one pass over the nodes collects only raw
-titles, texts and line ids; every bbox is then parsed in bulk, the crop and
-blank-text drop are masks, and the word->line containment is a vectorized
-first match.  Output is columnar (struct-of-arrays), not per-token objects:
-the Spark kernel keeps every downstream pass vectorized over numpy arrays.
+The scan walks each document's tree once, collecting only raw titles,
+texts and line ids; every bbox of the batch is then parsed in bulk, the crop
+and blank-text drop are masks, and the word->line containment is a
+vectorized first match over all pages of the batch.  Output is columnar
+(struct-of-arrays) with a document column, not per-token objects: the Spark
+kernel keeps every downstream pass vectorized over the whole Arrow batch.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from html.parser import HTMLParser
-from typing import List, Optional, Tuple
+from typing import Dict, Iterable, List, Optional, Tuple
 from xml.etree import ElementTree as ET
 
 import numpy as np
 
 BBOX_RE = re.compile(r"bbox (\d+)\s+(\d+)\s+(\d+)\s+(\d+)")
 
-# bulk title check: every title exactly "bbox d d d d", <= 18 ASCII digits
-# per number (always fits int64), each title followed by the separator
+# bulk title check over titles joined on, led and ended by the separator:
+# finds a title that is not "bbox d d d d" (<= 18 ASCII digits per number,
+# so int64 never overflows) optionally followed by a "; ..." suffix
+# (tesseract's "; x_wconf 93", "; baseline ...; x_size ...").  One lookahead
+# per separator: memory stays flat however many titles a batch joins.
 _TITLE_SEP = "\x00"
-_BBOX_LIST_RE = re.compile(r"(?:bbox [0-9]{1,18} [0-9]{1,18} [0-9]{1,18} [0-9]{1,18}\x00)*")
+_OFF_BULK_RE = re.compile(
+    r"\x00(?!bbox [0-9]{1,18} [0-9]{1,18} [0-9]{1,18} [0-9]{1,18}(?:;[^\x00]*)?\x00|\Z)"
+)
+_SUFFIX_RE = re.compile(r";[^\x00]*")
 
-# cells per chunk of the words x lines containment test
+# word-line pairs per chunk of the containment test
 _CONTAIN_CELLS = 1 << 18
 
 # HTML void elements (no closing tag) for the fallback parser.
@@ -67,7 +74,9 @@ def parse_title_bbox(title: Optional[str]) -> Optional[Tuple[int, int, int, int]
 
 @dataclass
 class TokenArrays:
-    """Columnar token table for a single document."""
+    """Columnar token table of a batch of documents, document-major: the
+    tokens of document ``d`` are the rows whose ``doc`` is ``d``, in scan
+    order.  A table built without ``doc`` holds one document."""
 
     text: np.ndarray  # object
     page: np.ndarray  # int64
@@ -76,15 +85,35 @@ class TokenArrays:
     x2: np.ndarray
     y2: np.ndarray
     line_id: np.ndarray  # object (str or None)
+    doc: Optional[np.ndarray] = None  # int64
+
+    def __post_init__(self) -> None:
+        if self.doc is None:
+            self.doc = np.zeros(len(self.text), dtype=np.int64)
 
     def __len__(self) -> int:
         return len(self.text)
+
+    def rows(self, lo: int, hi: int) -> "TokenArrays":
+        """Rows ``lo:hi`` (views) as a one-document table."""
+        return TokenArrays(
+            self.text[lo:hi], self.page[lo:hi], self.x1[lo:hi], self.y1[lo:hi],
+            self.x2[lo:hi], self.y2[lo:hi], self.line_id[lo:hi],
+        )
 
     @staticmethod
     def empty() -> "TokenArrays":
         o = np.empty(0, dtype=object)
         i = np.empty(0, dtype=np.int64)
-        return TokenArrays(o, i.copy(), i.copy(), i.copy(), i.copy(), i.copy(), o.copy())
+        return TokenArrays(o, i, i, i, i, i, o, i)
+
+    @staticmethod
+    def concat(parts: List["TokenArrays"]) -> "TokenArrays":
+        if not parts:
+            return TokenArrays.empty()
+        return TokenArrays(*(np.concatenate(c) for c in zip(*(
+            (t.text, t.page, t.x1, t.y1, t.x2, t.y2, t.line_id, t.doc) for t in parts
+        ))))
 
 
 # --------------------------------------------------------------------------
@@ -207,134 +236,255 @@ def scan_tokens(
     root, is_hocr = parse_dom(html)
     if not is_hocr:
         return TokenArrays.empty()
-    return scan_tokens_from_dom(root, table_bbox)
+    tok, errors = scan_tokens_from_dom([(root, table_bbox)])
+    if errors:
+        raise errors[0]
+    return tok
 
 
-def _title_boxes(titles: List[str]) -> Tuple[np.ndarray, np.ndarray]:
-    """All bbox titles of one document -> ``(boxes (n, 4), valid (n,))``.
+@dataclass
+class _Walk:
+    """What the node walk keeps of a batch: raw word and line strings, and
+    per page (document, page number, words, lines)."""
 
-    Bulk path: the titles joined on NUL pass one ASCII regex requiring each
-    to be exactly ``bbox d d d d`` (<= 18 digits, so int64 never overflows)
-    and one ``np.fromstring`` converts every number.  NUL cannot occur in an
-    XML attribute; an HTML-fallback title holding one yields more than 4
-    numbers per title and is caught by the count check.  Any other title
-    sends the whole document through
+    texts: List[str] = field(default_factory=list)
+    word_titles: List[str] = field(default_factory=list)
+    line_ids: List[str] = field(default_factory=list)
+    line_titles: List[str] = field(default_factory=list)
+    pages: List[Tuple[int, int, int, int]] = field(default_factory=list)
+    crops: List[Optional[Tuple[int, int, int, int]]] = field(default_factory=list)
+    word_ends: List[int] = field(default_factory=list)  # per document
+    line_ends: List[int] = field(default_factory=list)
+
+    def add(self, root, table_bbox) -> None:
+        """Walk one document's tree: only raw titles, texts and ids."""
+        d = len(self.crops)
+        texts, titles = self.texts, self.word_titles
+        line_ids, line_titles = self.line_ids, self.line_titles
+        add_title, add_text = titles.append, texts.append
+        is_et = root.__class__ is not _Node
+        page_nodes = [n for n in root.iter() if "ocr_page" in (n.get("class") or "")]
+        for pi, page in enumerate(page_nodes, start=1):
+            li = 0
+            nw = len(texts)
+            it = page.iter()
+            next(it)  # page.iter() yields the page node itself first
+            for n in it:
+                cls = n.get("class")
+                if not cls:
+                    continue
+                # a node carrying both classes keeps both roles
+                if "ocr_line" in cls:
+                    # lines without a parsable bbox still consume an index
+                    li += 1
+                    line_ids.append(n.get("id") or f"page_{pi}_line_{li}")
+                    line_titles.append(n.get("title") or "")
+                if "ocrx_word" in cls:
+                    add_title(n.get("title") or "")
+                    # childless fast path (the normal hOCR word shape) avoids
+                    # the itertext generator; identical to the join for 0 kids
+                    if is_et and not len(n):
+                        add_text((n.text or "").strip())
+                    else:
+                        add_text("".join(n.itertext()).strip())
+            self.pages.append((d, pi, len(texts) - nw, li))
+        self.crops.append(table_bbox)
+        self.word_ends.append(len(texts))
+        self.line_ends.append(len(line_ids))
+
+    def document(self, d: int) -> "_Walk":
+        w0, w1 = (self.word_ends[d - 1] if d else 0), self.word_ends[d]
+        l0, l1 = (self.line_ends[d - 1] if d else 0), self.line_ends[d]
+        return _Walk(
+            self.texts[w0:w1], self.word_titles[w0:w1],
+            self.line_ids[l0:l1], self.line_titles[l0:l1],
+            [(0, p, nw, nl) for doc, p, nw, nl in self.pages if doc == d],
+            [self.crops[d]], [w1 - w0], [l1 - l0],
+        )
+
+
+def _joined(titles: List[str]) -> str:
+    return _TITLE_SEP + _TITLE_SEP.join(titles) + _TITLE_SEP
+
+
+def _bulk_ok(joined: str, n: int) -> bool:
+    return _OFF_BULK_RE.search(joined) is None and joined.count(_TITLE_SEP) == n + 1
+
+
+def _bulk_numbers(joined: str) -> np.ndarray:
+    if ";" in joined:
+        joined = _SUFFIX_RE.sub("", joined)
+    body = joined.replace("bbox ", "").replace(_TITLE_SEP, " ")
+    return np.fromstring(body, dtype=np.int64, sep=" ").reshape(-1, 4)
+
+
+def _title_boxes(titles: List[str], ends: List[int]) -> Tuple[np.ndarray, np.ndarray]:
+    """All bbox titles of a batch (document ``d``'s end at ``ends[d]``) ->
+    ``(boxes (n, 4), valid (n,))``.
+
+    Bulk path: the titles joined on NUL pass one ASCII regex check requiring
+    each to be ``bbox d d d d`` (<= 18 digits, so int64 never overflows) with
+    an optional ``; ...`` suffix, which is cut before one ``np.fromstring``
+    converts every number.  That is :func:`parse_title_bbox`'s first match:
+    the title starts with it and its fourth number ends at the ``;``.  NUL
+    cannot occur in an XML attribute; an HTML-fallback title holding one
+    adds a separator and fails the count check.  When the batch fails, each
+    document is checked alone and a failing one goes title by title through
     :func:`parse_title_bbox`, so the accepted language is that function's
-    (``; x_wconf`` suffixes, non-ASCII digits, ...).  Boxes whose ints do not
-    fit int64 are kept as Python ints (object dtype): the caller's final
-    int64 cast then raises for a KEPT token only, as the scalar scan did."""
-    joined = _TITLE_SEP.join(titles) + _TITLE_SEP
-    if _BBOX_LIST_RE.fullmatch(joined):
-        body = joined.replace("bbox ", "").replace(_TITLE_SEP, " ")
-        nums = np.fromstring(body, dtype=np.int64, sep=" ")
-        if nums.size == 4 * len(titles):
-            return nums.reshape(-1, 4), np.ones(len(titles), dtype=bool)
-    parsed = [parse_title_bbox(t) for t in titles]
-    valid = np.asarray([bb is not None for bb in parsed], dtype=bool)
+    (double spaces, non-ASCII digits, ...).  Boxes whose ints do not fit
+    int64 are kept as Python ints (object dtype): the caller's final int64
+    cast then raises for a KEPT token only, as the scalar scan did."""
+    if not titles:
+        return np.zeros((0, 4), dtype=np.int64), np.zeros(0, dtype=bool)
+    joined = _joined(titles)
+    if _bulk_ok(joined, len(titles)):
+        return _bulk_numbers(joined), np.ones(len(titles), dtype=bool)
+    bulk, slow, parsed, counts = [], [], [], []
+    start = 0
+    for end in ends:
+        part = titles[start:end]
+        joined = _joined(part)
+        ok = _bulk_ok(joined, len(part))
+        if ok:
+            bulk.append(joined)
+        else:
+            parsed += [parse_title_bbox(t) for t in part]
+        slow.append(not ok)
+        counts.append(end - start)
+        start = end
+    fallback = np.repeat(slow, counts)
+    valid = np.ones(len(titles), dtype=bool)
+    valid[fallback] = [bb is not None for bb in parsed]
     boxes = [bb or (0, 0, 0, 0) for bb in parsed]
     try:
-        return np.asarray(boxes, dtype=np.int64).reshape(-1, 4), valid
+        slow_boxes = np.asarray(boxes, dtype=np.int64).reshape(-1, 4)
+        out = np.empty((len(titles), 4), dtype=np.int64)
     except OverflowError:
-        return np.asarray(boxes, dtype=object).reshape(-1, 4), valid
+        slow_boxes = np.asarray(boxes, dtype=object).reshape(-1, 4)
+        out = np.empty((len(titles), 4), dtype=object)
+    out[fallback] = slow_boxes
+    out[~fallback] = _bulk_numbers("".join(bulk)) if bulk else 0
+    return out, valid
 
 
-def _first_containing(words: np.ndarray, lines: np.ndarray) -> np.ndarray:
-    """Index of the first row of ``lines`` whose box contains each row of
-    ``words`` (inclusive edges), -1 when none.  The words x lines test runs
-    in chunks of at most ``_CONTAIN_CELLS`` cells, so a giant page never
-    allocates the full matrix."""
-    out = np.empty(len(words), dtype=np.int64)
-    step = max(1, _CONTAIN_CELLS // len(lines))
-    L = lines.T[:, None, :]
-    for s in range(0, len(words), step):
-        W = words[s : s + step].T[:, :, None]
-        inside = (W[0] >= L[0]) & (W[1] >= L[1]) & (W[2] <= L[2]) & (W[3] <= L[3])
-        first = inside.argmax(axis=1)
-        hit = inside[np.arange(len(first)), first]
-        out[s : s + step] = np.where(hit, first, -1)
+def _first_containing(
+    words: np.ndarray, lines: np.ndarray, lo: np.ndarray, hi: np.ndarray
+) -> np.ndarray:
+    """Index of the first column of ``lines`` in ``[lo, hi)`` whose box
+    contains each column of ``words`` (inclusive edges), -1 when none; both
+    are (4, n) box tables.  The word-line pairs are tested in chunks of about
+    ``_CONTAIN_CELLS``: a chunk whose words share one candidate range (one
+    page) is a dense words x lines test, any other chunk tests its listed
+    pairs, the y extent first.  A giant page never allocates the full
+    matrix."""
+    n = words.shape[1]
+    out = np.full(n, -1, dtype=np.int64)
+    cnt = hi - lo
+    ends = np.cumsum(cnt)
+    s = 0
+    while s < n:
+        base = int(ends[s] - cnt[s])
+        e = max(s + 1, int(np.searchsorted(ends, base + _CONTAIN_CELLS, side="right")))
+        a, b = int(lo[s]), int(hi[s])
+        if a == lo[e - 1] and b == hi[e - 1]:
+            if b > a:
+                W = words[:, s:e, None]
+                L = lines[:, None, a:b]
+                inside = (W[0] >= L[0]) & (W[1] >= L[1]) & (W[2] <= L[2]) & (W[3] <= L[3])
+                first = inside.argmax(axis=1)
+                hit = inside[np.arange(len(first)), first]
+                out[s:e] = np.where(hit, a + first, -1)
+        else:
+            c = cnt[s:e]
+            w = np.repeat(np.arange(s, e), c)
+            li = np.arange(len(w)) + np.repeat(lo[s:e] - (ends[s:e] - c - base), c)
+            y_in = np.flatnonzero((words[1][w] >= lines[1][li]) & (words[3][w] <= lines[3][li]))
+            w, li = w[y_in], li[y_in]
+            x_in = np.flatnonzero((words[0][w] >= lines[0][li]) & (words[2][w] <= lines[2][li]))
+            if x_in.size:
+                w, li = w[x_in], li[x_in]
+                first = np.flatnonzero(np.concatenate(([True], w[1:] != w[:-1])))
+                out[w[first]] = li[first]
+        s = e
     return out
 
 
-def scan_tokens_from_dom(
-    root: _Node, table_bbox: Optional[Tuple[int, int, int, int]] = None
-) -> TokenArrays:
-    # one pass over each page's nodes collects raw titles/texts/ids only;
-    # bboxes, the crop, the blank-text drop and the word->line containment
-    # then run once per document over arrays
-    texts: List[str] = []
-    titles: List[str] = []  # word titles, then (appended below) line titles
-    word_ends: List[int] = []  # len(texts) after each page
-    line_ids: List[str] = []
-    line_titles: List[str] = []
-    line_pages: List[int] = []
-
-    page_nodes = [n for n in root.iter() if "ocr_page" in (n.get("class") or "")]
-    is_et = root.__class__ is not _Node
-    add_title, add_text = titles.append, texts.append
-    for pi, page in enumerate(page_nodes, start=1):
-        li = 0
-        it = page.iter()
-        next(it)  # page.iter() yields the page node itself first
-        for n in it:
-            cls = n.get("class")
-            if not cls:
-                continue
-            # a node carrying both classes keeps both roles
-            if "ocr_line" in cls:
-                # lines without a parsable bbox still consume an index
-                li += 1
-                line_ids.append(n.get("id") or f"page_{pi}_line_{li}")
-                line_titles.append(n.get("title") or "")
-                line_pages.append(pi)
-            if "ocrx_word" in cls:
-                add_title(n.get("title") or "")
-                # childless fast path (the normal hOCR word shape) avoids
-                # the itertext generator; identical to the join for 0 kids
-                if is_et and not len(n):
-                    add_text((n.text or "").strip())
-                else:
-                    add_text("".join(n.itertext()).strip())
-        word_ends.append(len(texts))
-
-    nw = len(texts)
+def _tokens(walk: _Walk) -> TokenArrays:
+    """The array half of the scan over a walked batch."""
+    nw = len(walk.texts)
     if nw == 0:
         return TokenArrays.empty()
-    titles += line_titles
-    boxes, valid = _title_boxes(titles)
-    wb = boxes[:nw]
-    text = np.asarray(texts, dtype=object)
-    keep = (text != "") & valid[:nw]
-    if table_bbox is not None:
-        X1, Y1, X2, Y2 = table_bbox
-        keep &= (wb[:, 0] >= X1) & (wb[:, 1] >= Y1) & (wb[:, 2] <= X2) & (wb[:, 3] <= Y2)
+    wb, wvalid = _title_boxes(walk.word_titles, walk.word_ends)
+    text = np.asarray(walk.texts, dtype=object)
+    keep = (text != "") & wvalid
+    for d, crop in enumerate(walk.crops):
+        if crop is not None:
+            X1, Y1, X2, Y2 = crop
+            a, b = (walk.word_ends[d - 1] if d else 0), walk.word_ends[d]
+            keep[a:b] &= (
+                (wb[a:b, 0] >= X1) & (wb[a:b, 1] >= Y1) & (wb[a:b, 2] <= X2) & (wb[a:b, 3] <= Y2)
+            )
     if not keep.any():
         return TokenArrays.empty()
-    page = np.searchsorted(word_ends, np.flatnonzero(keep), side="right") + 1
-    wb = wb[keep]
+    pdoc, pno, pwords, plines = (np.asarray(c, dtype=np.int64) for c in zip(*walk.pages))
+    kept = np.flatnonzero(keep)
+    inst = np.repeat(np.arange(len(pno)), pwords)[kept]  # (document, page) of each word
+    wb = wb[kept]
 
-    line_id = np.full(len(page), None, dtype=object)
-    if line_ids:
-        lb = boxes[nw:]
-        lpage = np.asarray(line_pages, dtype=np.int64)
-        lkeep = valid[nw:]
-        ids = np.asarray(line_ids + [None], dtype=object)
-        # words and lines are both in page order: match page by page against
-        # that page's lines in document order; -1 (no line) picks the None
-        for p in np.unique(lpage[lkeep]).tolist():
-            w_lo, w_hi = np.searchsorted(page, [p, p + 1])
-            if w_lo == w_hi:
-                continue
-            on_page = np.flatnonzero((lpage == p) & lkeep)
-            hit = _first_containing(wb[w_lo:w_hi], lb[on_page])
-            line_id[w_lo:w_hi] = ids[np.where(hit >= 0, on_page[hit], -1)]
+    line_id = np.full(len(kept), None, dtype=object)
+    lb, lvalid = _title_boxes(walk.line_titles, walk.line_ends)
+    lv = np.flatnonzero(lvalid)
+    if lv.size:
+        # words and lines are both in (document, page) order: each word's
+        # candidates are its page's lines in document order; -1 picks None
+        lpage = np.repeat(np.arange(len(pno)), plines)[lv]
+        lo = np.searchsorted(lpage, inst, side="left")
+        hi = np.searchsorted(lpage, inst, side="right")
+        hit = _first_containing(wb.T.copy(), lb[lv].T.copy(), lo, hi)
+        ids = np.asarray(walk.line_ids + [None], dtype=object)
+        line_id = ids[np.where(hit >= 0, lv[hit], -1)]
 
     wb = np.asarray(wb, dtype=np.int64)  # OverflowError for a kept huge coordinate
     return TokenArrays(
-        text=text[keep],
-        page=page,
+        text=text[kept],
+        page=pno[inst],
         x1=wb[:, 0],
         y1=wb[:, 1],
         x2=wb[:, 2],
         y2=wb[:, 3],
         line_id=line_id,
+        doc=pdoc[inst],
     )
+
+
+def scan_tokens_from_dom(
+    docs: Iterable[Tuple[object, Optional[Tuple[int, int, int, int]]]],
+) -> Tuple[TokenArrays, Dict[int, Exception]]:
+    """Token scan of a batch: ``docs`` yields (root, table_bbox) per
+    document; each tree is walked once and can be dropped before the next is
+    made.  The bboxes, the crop and blank-text drop and the word->line
+    containment then run once over the batch's arrays.
+
+    Returns the batch's token table and, per document index, the error of a
+    document whose kept token has a coordinate beyond int64 (the batch is
+    then re-scanned one document at a time, so no other document loses its
+    tokens)."""
+    walk = _Walk()
+    for doc in docs:
+        walk.add(*doc)
+        del doc  # the tree goes before the next document is parsed
+    try:
+        return _tokens(walk), {}
+    except OverflowError as exc:
+        if len(walk.crops) == 1:
+            return TokenArrays.empty(), {0: exc}
+    parts, errors = [], {}
+    for d in range(len(walk.crops)):
+        try:
+            tok = _tokens(walk.document(d))
+        except OverflowError as exc:
+            errors[d] = exc
+            continue
+        tok.doc[:] = d
+        parts.append(tok)
+    return TokenArrays.concat(parts), errors

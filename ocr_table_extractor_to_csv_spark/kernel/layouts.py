@@ -11,6 +11,7 @@ but accepts "-").
 from __future__ import annotations
 
 import re
+from collections import Counter
 from dataclasses import dataclass, field
 from statistics import median
 from typing import List, Optional, Sequence, Tuple
@@ -18,16 +19,15 @@ from typing import List, Optional, Sequence, Tuple
 import numpy as np
 
 from .geometry import (
+    Spans,
     coerce_interval_count,
     merge_line_spans,
-    nearest_interval_by_edges,
     nearest_interval_inside_zero,
-    percentile_linear,
     profile_intervals,
     zero_run_cuts,
     coverage_profile,
 )
-from .lines import Line
+from .lines import Line, Lines
 from .hocr import TokenArrays
 
 # ---- numeric / text predicates (kept verbatim per call site) --------------
@@ -247,16 +247,17 @@ def detect_header_row(
 # ===========================================================================
 
 
-def assign_financial_three_columns(tok: TokenArrays, lines: List[Line]) -> List[Rec]:
+def assign_financial_three_columns(lines: Lines, spans: Spans) -> List[Rec]:
     """Two rightmost numeric spans -> value columns; every text span joins
-    the label (assign_financial.py:41-93).  Span gap is FIXED at 18px."""
+    the label (assign_financial.py:41-93).  One Rec per line of ``lines``,
+    whose ``spans`` were merged with the FIXED 18px gap."""
     recs: List[Rec] = []
-    for ln, spans in zip(lines, compute_line_spans(tok, lines, max_gap_px=18)):
-        if not spans:
+    for ln, line_spans in zip(lines.views(), spans.lists()):
+        if not line_spans:
             recs.append(Rec(ln.page, ln.y1, ln.y2, ["", "", ""]))
             continue
-        numeric = [s for s in spans if is_numeric_span_financial(s[2])]
-        textual = [s for s in spans if not is_numeric_span_financial(s[2])]
+        numeric = [s for s in line_spans if is_numeric_span_financial(s[2])]
+        textual = [s for s in line_spans if not is_numeric_span_financial(s[2])]
         numeric.sort(key=lambda s: s[0])
         col_a = col_b = ""
         if len(numeric) >= 2:
@@ -347,96 +348,167 @@ def postprocess_financial(
 # ===========================================================================
 
 
-def compute_line_spans(
-    tok: TokenArrays, lines: List[Line], max_gap_px: Optional[int] = None
-) -> List[List[Tuple[int, int, str]]]:
-    """Span merge of every line in one segmented pass
+def compute_line_spans(tok: TokenArrays, lines: Lines, max_gap_px: Optional[int] = None) -> Spans:
+    """Span merge of every line of the batch in one segmented pass
     (geometry.merge_line_spans).  With the default per-line quantile gap it
     runs ONCE and is shared by the whole dynamic path (the reference
     recomputes it in three places with identical inputs: column_model.py:104,
     :62, assign_dynamic.py:55); the financial path passes its fixed gap."""
-    if not lines:
-        return []
-    idx = np.concatenate([ln.idx for ln in lines])  # each line x1-sorted
+    m = lines.members
     return merge_line_spans(
-        tok.text[idx], tok.x1[idx], tok.x2[idx], [len(ln.idx) for ln in lines], max_gap_px
+        tok.text[m], tok.x1[m], tok.x2[m], lines.counts, max_gap_px, lines.doc
     )
 
 
-def numeric_span_flags(spans_per_line) -> List[List[bool]]:
+def numeric_span_flags(spans: Spans) -> np.ndarray:
     """is_numeric_span_dynamic of every span, evaluated once and shared by
     infer_numeric_columns and assign_dynamic."""
-    return [[is_numeric_span_dynamic(s[2]) for s in spans] for spans in spans_per_line]
+    return np.fromiter(map(is_numeric_span_dynamic, spans.text), dtype=bool, count=len(spans.text))
+
+
+def _half_sum_floor(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``(a + b) // 2`` of non-negative int64 arrays, exact past int64."""
+    return a // 2 + b // 2 + (a % 2 + b % 2) // 2
+
+
+def _at_least(y: np.ndarray, thr: np.ndarray) -> np.ndarray:
+    """``y >= thr`` for int64 ``y`` and float ``thr >= 0`` compared exactly,
+    as Python compares int with float (numpy would round y to float)."""
+    c = np.ceil(thr)
+    fits = c < 2.0**63
+    return (y >= np.where(fits, c, 0).astype(np.int64)) & fits
+
+
+def _at_most(y: np.ndarray, thr: np.ndarray) -> np.ndarray:
+    """``y <= thr``, exactly as :func:`_at_least`."""
+    f = np.floor(thr)
+    fits = f < 2.0**63
+    return (y <= np.where(fits, f, 0).astype(np.int64)) | ~fits
+
+
+def _first_per_group(group: np.ndarray) -> np.ndarray:
+    """Offsets where a sorted key array starts a new run."""
+    return np.flatnonzero(np.concatenate(([True], group[1:] != group[:-1])))
 
 
 def infer_numeric_columns(
-    tok: TokenArrays,
-    lines: List[Line],
+    lines: Lines,
+    spans: Spans,
+    numeric: np.ndarray,
+    n_docs: int,
     min_sep_px: int = 35,
     cut_quantile: float = 90.0,
     pad_px: int = 24,
-    spans_per_line=None,
-    numeric=None,
-) -> Tuple[List[Tuple[int, int]], Optional[List[str]]]:
-    """Hybrid column model (column_model.py:84-201): modal numeric-span
-    count over the bottom 70% picks K<=4 columns; per-position (rightmost,
-    2nd-rightmost, ...) bucket medians become centers; midpoint edges +/-
-    pad form intervals.  Thin buckets (<max(5, 5% of lines)) force the
-    global-gap fallback; year strings in the top 20% band name columns."""
-    if not lines:
-        return [], None
+) -> Tuple[List[List[Tuple[int, int]]], List[Optional[List[str]]]]:
+    """Hybrid column model (column_model.py:84-201), per document of the
+    batch: modal numeric-span count over the bottom 70% picks K<=4 columns;
+    per-position (rightmost, 2nd-rightmost, ...) bucket medians become
+    centers; midpoint edges +/- pad form intervals.  Thin buckets (<max(5, 5%
+    of lines)) force the global-gap fallback; year strings in the top 20%
+    band name columns.
 
-    if spans_per_line is None:
-        spans_per_line = compute_line_spans(tok, lines)
-    if numeric is None:
-        numeric = numeric_span_flags(spans_per_line)
-    per_line: List[List[int]] = []
-    for spans, flags in zip(spans_per_line, numeric):
-        centers = [int((x1 + x2) // 2) for (x1, x2, _t), f in zip(spans, flags) if f]
-        centers.sort()
-        per_line.append(centers)
-    ys = [ln.y1 for ln in lines]
-    y_body = min(ys) + 0.30 * (max(ys) - min(ys))
-    body_counts = [len(c) for ln, c in zip(lines, per_line) if ln.y1 >= y_body]
+    The modal count, the bucket medians (np.median's float64 mean of the
+    middle values, then int()) and the fallback's gap quantile are segmented
+    passes over the batch; the interval arithmetic on <= 4 centers stays
+    per document in Python ints.  Returns (intervals, names) per document."""
+    intervals: List[List[Tuple[int, int]]] = [[] for _ in range(n_docs)]
+    names: List[Optional[List[str]]] = [None] * n_docs
+    n_lines = len(lines)
+    if n_lines == 0:
+        return intervals, names
+    ldoc = lines.doc
+    bounds = np.searchsorted(ldoc, np.arange(n_docs + 1))
+    n_of = np.diff(bounds)
+    has = np.flatnonzero(n_of)
+    ymin = np.zeros(n_docs, dtype=np.int64)
+    ymax = np.zeros(n_docs, dtype=np.int64)
+    ymin[has] = np.minimum.reduceat(lines.y1, bounds[has])
+    ymax[has] = np.maximum.reduceat(lines.y1, bounds[has])
 
-    k = 0
-    if body_counts:
-        vals, cnts = np.unique(np.asarray(body_counts), return_counts=True)
-        pos = vals > 0
-        if pos.any():
-            k = int(vals[pos][int(np.argmax(cnts[pos]))])
-    k = min(k, 4)
+    # sorted centers of each line's numeric spans
+    num = np.flatnonzero(numeric)
+    span_line = np.repeat(np.arange(n_lines), np.diff(spans.start))
+    nline = span_line[num]
+    center = _half_sum_floor(spans.x1[num], spans.x2[num])
+    center = center[np.lexsort((center, nline))]
+    cnt = np.bincount(nline, minlength=n_lines)
+    cend = np.cumsum(cnt)
 
-    intervals: List[Tuple[int, int]] = []
-    if k >= 2:
-        buckets: List[List[int]] = [[] for _ in range(k)]
-        for centers in per_line:
-            for pos in range(k):
-                if len(centers) >= pos + 1:
-                    buckets[pos].append(centers[-(pos + 1)])
-        if not any(len(b) < max(5, 0.05 * len(per_line)) for b in buckets):
-            ordered = sorted(int(np.median(b)) for b in buckets)
+    # modal count over the body lines with any numeric span; ties -> smallest
+    body = _at_least(lines.y1, (ymin + 0.30 * (ymax - ymin))[ldoc]) & (cnt > 0)
+    k = np.zeros(n_docs, dtype=np.int64)
+    if body.any():
+        bd, bc = ldoc[body], cnt[body]
+        o = np.lexsort((bc, bd))
+        bd, bc = bd[o], bc[o]
+        runs = np.flatnonzero(np.concatenate(([True], (bd[1:] != bd[:-1]) | (bc[1:] != bc[:-1]))))
+        rdoc, rval = bd[runs], bc[runs]
+        rcnt = np.diff(np.append(runs, len(bd)))
+        o = np.lexsort((rval, -rcnt, rdoc))
+        best = o[_first_per_group(rdoc[o])]
+        k[rdoc[best]] = np.minimum(rval[best], 4)
+
+    # bucket p holds each line's (p+1)-th rightmost center; the smallest
+    # bucket (p = k-1) decides thinness
+    kl = k[ldoc]
+    full = np.bincount(ldoc[(kl >= 2) & (cnt >= kl)], minlength=n_docs)
+    model = (k >= 2) & ~(full < np.maximum(5, 0.05 * n_of))
+    medians: List[List[int]] = [[] for _ in range(n_docs)]
+    if model.any():
+        take = np.where(model[ldoc], np.minimum(cnt, kl), 0)
+        line = np.repeat(np.arange(n_lines), take)
+        pos = np.arange(len(line)) - np.repeat(np.cumsum(take) - take, take)
+        bkey = ldoc[line] * 4 + pos
+        bval = center[cend[line] - 1 - pos]
+        o = np.lexsort((bval, bkey))
+        bkey, bval = bkey[o], bval[o].astype(np.float64)
+        first = _first_per_group(bkey)
+        size = np.diff(np.append(first, len(bkey)))
+        med = (bval[first + (size - 1) // 2] + bval[first + size // 2]) / 2
+        for d, v in zip((bkey[first] // 4).tolist(), med.tolist()):
+            medians[d].append(int(v))
+
+    # fallback: cuts at wide gaps between the document's sorted centers
+    cdoc = ldoc[nline]
+    rest = ~model[cdoc]
+    allc, cdoc = center[rest], cdoc[rest]
+    o = np.lexsort((allc, cdoc))
+    allc, cdoc = allc[o], cdoc[o]
+    p = np.zeros(n_docs)
+    same = cdoc[1:] == cdoc[:-1]
+    if same.any():
+        gdoc = cdoc[1:][same]
+        gaps = (allc[1:] - allc[:-1])[same].astype(np.float64)
+        gaps = gaps[np.lexsort((gaps, gdoc))]
+        g_n = np.bincount(gdoc, minlength=n_docs)
+        gh = np.flatnonzero(g_n)
+        m = g_n[gh]
+        idx = (cut_quantile / 100.0) * (m - 1)
+        lo = idx.astype(np.int64)
+        hi = np.minimum(lo + 1, m - 1)
+        base = (np.cumsum(g_n) - g_n)[gh]
+        a = gaps[base + lo]
+        p[gh] = a + (idx - lo) * (gaps[base + hi] - a)
+    c_bounds = np.searchsorted(cdoc, np.arange(n_docs + 1)).tolist()
+    allc = allc.tolist()
+
+    for d in has.tolist():
+        if medians[d]:
+            ordered = sorted(medians[d])
             edges = [(a + b) // 2 for a, b in zip(ordered, ordered[1:])]
             L = ordered[0] - pad_px
             for mid in edges:
-                intervals.append((int(L), int(mid + pad_px)))
+                intervals[d].append((int(L), int(mid + pad_px)))
                 L = int(mid - pad_px)
-            intervals.append((int(L), int(ordered[-1] + pad_px)))
-
-    if not intervals:
-        allc = sorted(c for centers in per_line for c in centers)
-        if not allc:
-            return [], None
-        gaps = [b - a for a, b in zip(allc, allc[1:])]
-        p = (
-            percentile_linear(np.sort(np.asarray(gaps, dtype=np.float64)), cut_quantile)
-            if gaps
-            else 0.0
-        )
-        thr = max(min_sep_px, int(p))
-        cuts = [allc[0]]
-        cuts += [(a + b) // 2 for a, b in zip(allc, allc[1:]) if (b - a) >= thr]
-        cuts.append(allc[-1])
+            intervals[d].append((int(L), int(ordered[-1] + pad_px)))
+            continue
+        cs = allc[c_bounds[d] : c_bounds[d + 1]]
+        if not cs:
+            continue
+        thr = max(min_sep_px, int(p[d]))
+        cuts = [cs[0]]
+        cuts += [(a + b) // 2 for a, b in zip(cs, cs[1:]) if (b - a) >= thr]
+        cuts.append(cs[-1])
         raw = [(int(L), int(R)) for L, R in zip(cuts, cuts[1:]) if R - L >= 10]
         merged: List[Tuple[int, int]] = []
         for iv in raw:
@@ -444,50 +516,47 @@ def infer_numeric_columns(
                 merged.append(iv)
             else:
                 merged[-1] = (merged[-1][0], max(merged[-1][1], iv[1]))
-        intervals = [(int(L - pad_px), int(R + pad_px)) for (L, R) in merged][:4]
+        intervals[d] = [(int(L - pad_px), int(R + pad_px)) for (L, R) in merged][:4]
 
-    names = (
-        _year_names_from_top(tok, lines, intervals, spans_per_line)
-        if intervals
-        else None
-    )
+    # column names from the spans of each document's top 20% band
+    named = [d for d in has.tolist() if intervals[d]]
+    if named:
+        top = np.flatnonzero(_at_most(lines.y1, (ymin + 0.20 * (ymax - ymin))[ldoc]))
+        t_at = np.searchsorted(ldoc[top], np.arange(n_docs + 1)).tolist()
+        top, starts = top.tolist(), spans.start.tolist()
+        sx1, sx2 = spans.x1.tolist(), spans.x2.tolist()
+        for d in named:
+            top_spans = [
+                (sx1[i], sx2[i], spans.text[i])
+                for ln in top[t_at[d] : t_at[d + 1]]
+                for i in range(starts[ln], starts[ln + 1])
+            ]
+            names[d] = _year_names_from_top(top_spans, intervals[d])
     return intervals, names
 
 
 def _year_names_from_top(
-    tok: TokenArrays,
-    lines: List[Line],
-    intervals: List[Tuple[int, int]],
-    spans_per_line=None,
+    top_spans: List[Tuple[int, int, str]], intervals: List[Tuple[int, int]]
 ) -> Optional[List[str]]:
-    """column_model.py:47-82 (wrapped in a blanket try/except there)."""
-    if not intervals:
-        return None
-    if spans_per_line is None:
-        spans_per_line = compute_line_spans(tok, lines)
+    """column_model.py:47-82 (wrapped in a blanket try/except there), over
+    the spans of the document's top-band lines."""
     try:
-        ys = [ln.y1 for ln in lines]
-        if not ys:
-            return None
-        y_thr = min(ys) + 0.20 * (max(ys) - min(ys))
         votes: List[Tuple[int, str]] = []
-        for ln, spans in zip(lines, spans_per_line):
-            if ln.y1 <= y_thr:
-                for (x1, x2, txt) in spans:
-                    m = YEAR_RE.search(txt)
-                    if m:
-                        xc = (x1 + x2) // 2
-                        votes.append(
-                            (nearest_interval_inside_zero(xc, intervals), m.group(0))
-                        )
+        for (x1, x2, txt) in top_spans:
+            m = YEAR_RE.search(txt)
+            if m:
+                xc = (x1 + x2) // 2
+                votes.append((nearest_interval_inside_zero(xc, intervals), m.group(0)))
         if not votes:
             return None
         names = [""] * len(intervals)
         for j in range(len(intervals)):
             got = [yr for (idx, yr) in votes if idx == j]
             if got:
-                vals, cnts = np.unique(np.asarray(got), return_counts=True)
-                names[j] = str(vals[int(np.argmax(cnts))])
+                # np.unique + argmax: the most frequent, ties -> smallest
+                counts = Counter(got)
+                most = max(counts.values())
+                names[j] = min(yr for yr, c in counts.items() if c == most)
         if any(names):
             return [nm if nm else f"Valor_{i + 1}" for i, nm in enumerate(names)]
         return None
@@ -496,41 +565,72 @@ def _year_names_from_top(
 
 
 def assign_dynamic(
-    tok: TokenArrays,
-    lines: List[Line],
-    numeric_columns: List[Tuple[int, int]],
-    spans_per_line=None,
-    numeric=None,
+    lines: Lines,
+    spans: Spans,
+    numeric: np.ndarray,
+    columns: List[List[Tuple[int, int]]],
+    line_texts: List[str],
 ) -> List[Rec]:
-    """assign_dynamic.py:38-72: label = text spans left of the first numeric
-    column only; numeric spans fill nearest column FIRST-WINS."""
-    recs: List[Rec] = []
-    if not numeric_columns:
-        for ln in lines:
-            label = " ".join(tok.text[ln.idx].tolist())  # idx already x1-sorted
-            recs.append(Rec(ln.page, ln.y1, ln.y2, [label], num_count=0))
-        return recs
+    """assign_dynamic.py:38-72, one Rec per line of the batch: label = text
+    spans left of the document's first numeric column only; numeric spans
+    fill the nearest column FIRST-WINS.  A document without columns keeps
+    each line's text (``line_texts``) as its label.
 
-    if spans_per_line is None:
-        spans_per_line = compute_line_spans(tok, lines)
-    if numeric is None:
-        numeric = numeric_span_flags(spans_per_line)
-    cols = sorted(numeric_columns, key=lambda ab: ab[0])
-    first_L = cols[0][0]
-    for ln, spans, flags in zip(lines, spans_per_line, numeric):
-        nums = [s for s, f in zip(spans, flags) if f]
-        texts = [s for s, f in zip(spans, flags) if not f]
-        label = " ".join(txt for (x1, _x2, txt) in texts if x1 < first_L).strip()
-        values = [""] * len(cols)
-        for (x1, x2, txt) in nums:
-            j = nearest_interval_inside_zero((x1 + x2) / 2.0, cols)
-            values[j] = values[j] or txt.strip()
+    Nearest column of every numeric span at once: one float64 distance
+    matrix over the <= 4 columns padded with +inf, first-min argmin.  It
+    equals nearest_interval_inside_zero's exact comparisons: where
+    ``L <= xc`` differs from ``float(L) <= xc``, float(L) == xc and the edge
+    distance is 0 as well."""
+    n_docs = len(columns)
+    cols = [sorted(c, key=lambda ab: ab[0]) for c in columns]
+    L = np.zeros((n_docs, 4))
+    R = np.zeros((n_docs, 4))
+    pad = np.ones((n_docs, 4), dtype=bool)
+    for d, c in enumerate(cols):
+        if c:
+            L[d, : len(c)] = [a for a, _ in c]
+            R[d, : len(c)] = [b for _, b in c]
+            pad[d, : len(c)] = False
+    span_line = np.repeat(np.arange(len(lines)), np.diff(spans.start))
+    num = np.flatnonzero(numeric)
+    sd = lines.doc[span_line[num]]
+    xc = (spans.x1[num].astype(np.uint64) + spans.x2[num].astype(np.uint64)).astype(np.float64)
+    xc = (xc / 2.0)[:, None]
+    Ls, Rs = L[sd], R[sd]
+    dist = np.where(
+        (Ls <= xc) & (xc <= Rs), 0.0, np.minimum(np.abs(xc - Ls), np.abs(xc - Rs))
+    )
+    dist[pad[sd]] = np.inf
+    target = np.full(len(numeric), -1, dtype=np.int64)
+    target[num] = dist.argmin(axis=1)
+
+    texts = spans.text
+    sx1, target = spans.x1.tolist(), target.tolist()
+    starts = spans.start.tolist()
+    recs: List[Rec] = []
+    for k, (d, page, y1, y2) in enumerate(
+        zip(lines.doc.tolist(), lines.page.tolist(), lines.y1.tolist(), lines.y2.tolist())
+    ):
+        c = cols[d]
+        if not c:
+            recs.append(Rec(page, y1, y2, [line_texts[k]], num_count=0))
+            continue
+        first_L = c[0][0]
+        label = []
+        values = [""] * len(c)
+        for i in range(starts[k], starts[k + 1]):
+            j = target[i]
+            if j < 0:
+                if sx1[i] < first_L:
+                    label.append(texts[i])
+            else:
+                values[j] = values[j] or texts[i].strip()
         recs.append(
             Rec(
-                ln.page,
-                ln.y1,
-                ln.y2,
-                [label] + values,
+                page,
+                y1,
+                y2,
+                [" ".join(label).strip()] + values,
                 num_count=sum(1 for v in values if v),
             )
         )

@@ -272,6 +272,29 @@ def sample_stratified(
     )
 
 
+def _first_failure_wins(futures: list) -> list:
+    """Results of ``futures``, in order.  The branch that fails first is
+    re-raised with its own traceback, whichever was submitted first; the
+    others are cancelled if they have not started, else waited for and
+    their outcome observed: a second failure is attached as a note, not
+    lost."""
+    from concurrent.futures import as_completed, wait
+
+    for done in as_completed(futures):
+        exc = done.exception()
+        if exc is None:
+            continue
+        for f in futures:
+            f.cancel()
+        wait(futures)
+        for f in futures:
+            if f is not done and not f.cancelled() and f.exception() is not None:
+                other = f.exception()
+                exc.add_note(f"another branch also failed: {type(other).__name__}: {other}")
+        raise exc
+    return [f.result() for f in futures]
+
+
 def curate_pipeline(
     documents: DataFrame,
     min_quality: float = DEFAULT_MIN_QUALITY,
@@ -465,16 +488,12 @@ def curate_pipeline(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_clean = pool.submit(
-            decontaminate, base, eval_mod=eval_mod, n=n, threshold=threshold
-        )
-        f_keepers = pool.submit(
-            dedup_clusters, base, checkpoint_dir=checkpoint_dir
-        )
-        clean = f_clean.result().where(~F.col("contaminated")).select("doc_id")
-        keepers = (
-            f_keepers.result().where(F.col("is_keeper")).select("doc_id")
-        )
+        decont, clusters = _first_failure_wins([
+            pool.submit(decontaminate, base, eval_mod=eval_mod, n=n, threshold=threshold),
+            pool.submit(dedup_clusters, base, checkpoint_dir=checkpoint_dir),
+        ])
+    clean = decont.where(~F.col("contaminated")).select("doc_id")
+    keepers = clusters.where(F.col("is_keeper")).select("doc_id")
     survivors = scored.join(clean, "doc_id").join(keepers, "doc_id")
 
     shard = F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard")

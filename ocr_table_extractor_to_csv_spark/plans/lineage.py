@@ -5,8 +5,12 @@ TaskContext; the manifest is then a plain distributed aggregation over the
 extracted table — no driver-side loops, no side channels, and it holds at
 any scale because it is just a groupBy:
 
-  manifests(partition_id, n_urls, n_ok, n_failed, total_html_bytes,
-            total_csv_bytes, failed_urls[<=20 sample])
+  manifests([pass,] partition_id, n_urls, n_ok, n_failed, total_html_bytes,
+            total_csv_bytes, failed_urls[<=20 sample], max_task_attempt)
+
+A committed job frame carries ``pass`` (small / giant): each pass numbers
+its partitions from 0, so the manifest is keyed by (pass, partition_id)
+there, one row per task that wrote output.
 
 Invariant checked by tests: sum(n_urls) over manifests == count(pages in).
 """
@@ -18,7 +22,8 @@ from pyspark.sql import functions as F
 
 
 def build_manifests(extracted: DataFrame, failed_sample: int = 20) -> DataFrame:
-    return extracted.groupBy("partition_id").agg(
+    keys = (["pass"] if "pass" in extracted.columns else []) + ["partition_id"]
+    return extracted.groupBy(*keys).agg(
         F.count("*").alias("n_urls"),
         F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("n_ok"),
         F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_failed"),

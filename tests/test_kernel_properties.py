@@ -165,7 +165,7 @@ def test_segmented_span_merge_matches_scalar(tokens, invert_first):
     tok = _span_tokens(tokens, invert_first)
     lines = build_lines(tok)  # multi-page; single-token lines included
     for gap in (None, 18):  # per-line P95 (dynamic) and the financial 18 px
-        got = compute_line_spans(tok, lines, max_gap_px=gap)
+        got = compute_line_spans(tok, lines, max_gap_px=gap).lists()
         assert got == _scalar_spans(tok, lines, gap)
         assert all(type(a) is int and type(b) is int for spans in got for a, b, _ in spans)
 
@@ -200,7 +200,7 @@ def test_merge_line_spans_direct(lines):
             s1, s2 = x1[lo:hi], x2[lo:hi]
             g = line_gap_quantile(s1, s2) if gap is None else gap
             want.append(merge_spans(text[lo:hi], s1, s2, g))
-        assert merge_line_spans(text, x1, x2, counts, gap) == want
+        assert merge_line_spans(text, x1, x2, counts, gap).lists() == want
 
 
 def test_inverted_token_takes_the_scalar_fallback(monkeypatch):
@@ -212,10 +212,10 @@ def test_inverted_token_takes_the_scalar_fallback(monkeypatch):
     text = np.asarray(["A", "B"], dtype=object)
     x1 = np.asarray([0, 250], dtype=np.int64)
     x2 = np.asarray([200, 100], dtype=np.int64)
-    assert merge_line_spans(text, x1, x2, [2], 18) == [[(0, 200, "A"), (250, 100, "B")]]
+    assert merge_line_spans(text, x1, x2, [2], 18).lists() == [[(0, 200, "A"), (250, 100, "B")]]
     assert calls == [1]
     x2[1] = 260
-    assert merge_line_spans(text, x1, x2, [2], 18) == [[(0, 200, "A"), (250, 260, "B")]]
+    assert merge_line_spans(text, x1, x2, [2], 18).lists() == [[(0, 200, "A"), (250, 260, "B")]]
     assert calls == [1]  # x2 >= x1 everywhere: no scalar call
 
 

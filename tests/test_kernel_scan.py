@@ -1,7 +1,8 @@
 """Token-scan edge cases against the scalar semantics of ``parse_title_bbox``.
 
-``scan_tokens_from_dom`` parses every bbox of a document in bulk and falls
-back to ``parse_title_bbox`` when any title is not exactly ``bbox d d d d``.
+``scan_tokens_from_dom`` parses every bbox of a batch in bulk and falls back
+to ``parse_title_bbox`` for a document whose titles are not all ``bbox d d d
+d``, optionally followed by a ``; ...`` suffix.
 Each case here is compared with ``_scalar_scan``, a word-by-word restatement
 of the reference scan (parser.py:16-62) built on ``parse_title_bbox``.
 """
@@ -9,7 +10,7 @@ of the reference scan (parser.py:16-62) built on ``parse_title_bbox``.
 import pyarrow as pa
 import pytest
 
-from ocr_table_extractor_to_csv_spark.kernel import extract_document
+from ocr_table_extractor_to_csv_spark.kernel import extract_document, hocr
 from ocr_table_extractor_to_csv_spark.kernel.hocr import (
     _Node,
     parse_dom,
@@ -107,13 +108,54 @@ def test_bulk_path_plain_titles():
         ("", None),
     ],
 )
-def test_fallback_titles_match_parse_title_bbox(title, box):
+def test_fallback_titles_match_parse_title_bbox(title, box, monkeypatch):
     assert parse_title_bbox(title) == box
     # one odd title sends the whole document through parse_title_bbox; the
-    # plain neighbour must come out the same either way
+    # plain neighbour must come out the same either way.  A tesseract
+    # "; x_wconf" suffix stays on the bulk path.
+    calls = _count_fallback(monkeypatch)
     rows = _check(_hocr(_word("bbox 100 100 120 120", "plain") + _word(title, "odd")))
     assert rows[0][2:6] == (100, 100, 120, 120)
     assert [r[2:6] for r in rows[1:]] == ([box] if box else [])
+    assert (calls == []) == (title == "bbox 10 20 30 40; x_wconf 93")
+
+
+def _count_fallback(monkeypatch):
+    """Calls the scan makes to parse_title_bbox (its per-title fallback)."""
+    calls = []
+    monkeypatch.setattr(hocr, "parse_title_bbox", lambda t: calls.append(t) or parse_title_bbox(t))
+    return calls
+
+
+@pytest.mark.parametrize(
+    "word_title, line_title, bulk",
+    [
+        ("bbox 10 20 30 40; x_wconf 93", "bbox 0 0 500 60; baseline 0 -7; x_size 30", True),
+        ("bbox 10 20 30 40;", "bbox 0 0 500 60; x_size 30; x_descenders 6", True),
+        ("bbox 10 20 30 40; bbox 1 1 1 1", "bbox 0 0 500 60", True),  # first match
+        ("bbox 10 20 30 40; x_wconf \u0669\u0663", "bbox 0 0 500 60", True),  # suffix digits
+        ("bbox 10 20 30 40 ; x_wconf 93", "bbox 0 0 500 60", False),  # space before ;
+        ("bbox 10 20 30 4\u0660; x_wconf 93", "bbox 0 0 500 60", False),  # non-ASCII digit
+        (f"bbox 10 20 30 {'4' * 19}; x_wconf 93", "bbox 0 0 500 60", False),  # 19 digits
+        (f"bbox 10 20 30 {'9' * 19}; x_wconf 93", "bbox 0 0 500 60", False),  # past int64
+        ("bbox 10 20 30 40; x_wconf 93", f"bbox 0 0 {'5' * 19}; x_size 30", False),
+    ],
+)
+def test_tesseract_title_suffixes(word_title, line_title, bulk, monkeypatch):
+    calls = _count_fallback(monkeypatch)
+    html = _hocr(
+        f'<span class="ocr_line" id="L" title="{line_title}">'
+        + _word(word_title, "a")
+        + _word("bbox 40 20 60 40; x_wconf 90", "b")
+        + "</span>"
+    )
+    if "9" * 19 in word_title:
+        with pytest.raises(OverflowError):  # a kept coordinate past int64
+            _check(html)
+        return
+    rows = _check(html)
+    assert [r[0] for r in rows] == ["a", "b"]
+    assert (calls == []) == bulk
 
 
 def test_nineteen_digit_coordinate_is_an_error_row_not_a_wrap():

@@ -1808,3 +1808,52 @@ def test_normalize_text_hand_cases(spark):
     assert out[5]["text_norm"] == "a b\nc"
     assert out[6]["text_norm"] == "" and not out[6]["changed"]
     assert out[7]["text_norm"] == "already clean" and not out[7]["changed"]
+
+
+def _failing_branches(monkeypatch, decont_error, keeper_error, keeper_delay):
+    """curate_pipeline with both driver-thread branches replaced: each
+    raises its error (or returns a frame) after its delay."""
+    import time
+
+    from ocr_table_extractor_to_csv_spark.operators import curation
+
+    finished = []
+
+    def fake_decontaminate(base, **kw):
+        time.sleep(0.1)  # the keeper branch has started by now
+        if decont_error:
+            raise decont_error
+        return base.select("doc_id", F.lit(False).alias("contaminated"))
+
+    def fake_dedup_clusters(base, **kw):
+        time.sleep(keeper_delay)
+        finished.append("keepers")
+        if keeper_error:
+            raise keeper_error
+        return base.select("doc_id", F.lit(True).alias("is_keeper"))
+
+    monkeypatch.setattr(curation, "decontaminate", fake_decontaminate)
+    monkeypatch.setattr(dedup, "dedup_clusters", fake_dedup_clusters)
+    return curation.curate_pipeline, finished
+
+
+def test_curate_branch_failure_surfaces_with_its_traceback(spark, monkeypatch):
+    docs = spark.createDataFrame([(i, "spark table column data " * 5) for i in range(20)],
+                                 "doc_id long, text string")
+    # the decontaminate branch fails while the keeper branch is still
+    # running; the keeper branch also fails later
+    run, finished = _failing_branches(
+        monkeypatch, RuntimeError("eval side failed"), ValueError("cc failed"), 0.5
+    )
+    with pytest.raises(RuntimeError, match="eval side failed") as info:
+        run(docs, materialize="none")
+    assert info.traceback[-1].name == "fake_decontaminate"
+    assert finished == ["keepers"]  # observed before the failure left
+    assert info.value.__notes__ == ["another branch also failed: ValueError: cc failed"]
+
+    # only the second-submitted branch fails: its own error, not a wrapper
+    run, finished = _failing_branches(monkeypatch, None, ValueError("cc failed"), 0.0)
+    with pytest.raises(ValueError, match="cc failed") as info:
+        run(docs, materialize="none")
+    assert info.traceback[-1].name == "fake_dedup_clusters"
+    assert not getattr(info.value, "__notes__", None)

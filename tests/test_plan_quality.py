@@ -113,7 +113,9 @@ def test_curate_single_scan_single_shuffle(spark):
     # exactly ONE key (hash) exchange — the fp agg.  r7: the query-level
     # scale-adaptive fan-out (__spark_entry__._fan) may add round-robin
     # exchanges on tiny inputs; those are not keyed shuffles and vanish at
-    # scale, so the pin counts hashpartitioning exchanges only.
+    # scale, so the pin counts hashpartitioning exchanges only.  The
+    # fan-out adds exchanges, not scans: still exactly 2 scan nodes.
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, flags=re.M)) == 2
     assert len(re.findall(r"Arguments: hashpartitioning", plan)) == 1
     assert "Window" not in plan, "keeper election regressed to a window"
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

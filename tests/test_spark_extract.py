@@ -179,3 +179,29 @@ def test_lineage_manifest_accounts_for_all_rows(spark, pages):
     assert totals.ok + totals.failed == n
     assert totals.failed == 0
     extracted.unpersist()
+
+
+def test_job_manifests_one_row_per_pass_partition(spark, tmp_path):
+    """The small and giant passes both number their partitions from 0; the
+    job's manifests must not fold one pass's partition k into the other's."""
+    import jobs.extract_job as ej
+
+    pages = fixture_pages(spark, scale=0.2, giant_tokens=3000).select(
+        "url", "html", "layout", "args"
+    )
+    committed = ej.run_extract(
+        spark,
+        pages,
+        out=str(tmp_path / "out"),
+        progress_path=str(tmp_path / "prog"),
+        batch_id=0,
+        per_row_dispatch=True,
+        giant_threshold=50_000,
+        manifests=str(tmp_path / "manifests"),
+    )
+    manifests = spark.read.parquet(str(tmp_path / "manifests")).collect()
+    tasks = {(r["pass"], r["partition_id"]) for r in committed.select("pass", "partition_id").distinct().collect()}
+    assert {r["pass"] for r in manifests} == {"small", "giant"}
+    assert len(manifests) == len(tasks)
+    assert {(r["pass"], r["partition_id"]) for r in manifests} == tasks
+    assert sum(r["n_urls"] for r in manifests) == pages.count()

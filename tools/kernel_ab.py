@@ -3,7 +3,9 @@
 docs/s-per-core numbers.
 
 Runs the pure-Python extraction kernel (no Spark) over the deterministic
-fixture mix and prints a byte-identity digest plus the best-of-3 rate.
+fixture mix, in batches of ``BATCH`` documents through ``extract_documents``
+as the Spark operator does, and prints a byte-identity digest plus the
+best-of-3 rate.
 Usage for an adjacent A/B:
 
     python tools/kernel_ab.py          # side B (current tree)
@@ -23,9 +25,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from ocr_table_extractor_to_csv_spark.kernel.extract import extract_document
+from ocr_table_extractor_to_csv_spark.kernel.extract import extract_documents
 from ocr_table_extractor_to_csv_spark.sources.fixtures import generate_fixture
 
+BATCH = 256  # the session's spark.sql.execution.arrow.maxRecordsPerBatch
 FAMILIES = [
     "generic4", "generic_wrap", "generic_hdr_rx", "fin3", "dyn", "pro",
     "lineid", "bbox_crop", "multipage", "weird_numbers", "boiler",
@@ -45,9 +48,11 @@ def main(per_family: int = 24, trials: int = 3) -> None:
                 json.loads(a) if isinstance(a, str) else a,
             ))
 
+    def run():
+        return [r for s in range(0, len(docs), BATCH) for r in extract_documents(docs[s : s + BATCH])]
+
     h = hashlib.sha256()
-    for html, layout, args in docs:
-        r = extract_document(html, layout=layout, **args)
+    for r in run():
         # length-prefixed fields, so bytes cannot shift between them
         for part in (
             r.csv or b"",
@@ -62,8 +67,7 @@ def main(per_family: int = 24, trials: int = 3) -> None:
     best = 0.0
     for _ in range(trials):
         t0 = time.perf_counter()
-        for html, layout, args in docs:
-            extract_document(html, layout=layout, **args)
+        run()
         best = max(best, len(docs) / (time.perf_counter() - t0))
     print(f"{len(docs)} docs, best {best:.0f} docs/s single-core")
 
