@@ -107,9 +107,7 @@ def build_layoutlm_example(
     root, is_hocr = parse_dom(html)
     if not is_hocr:
         raise ValueError(f"not an hOCR document: {url}")
-    tok, errors = scan_tokens_from_dom([(root, table_bbox)])
-    if errors:
-        raise errors[0]
+    tok = scan_tokens_from_dom([(root, table_bbox)])
     if len(tok) == 0:
         raise ValueError(f"no tokens in {url}")
     lines = build_lines(tok)

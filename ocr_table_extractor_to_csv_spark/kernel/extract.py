@@ -169,13 +169,11 @@ def _extract_layout(layout: str, reqs: List[Request]) -> List[Union[ExtractResul
                 yield root, r.table_bbox
             del root  # before the next document is parsed
 
-    tok, errors = scan_tokens_from_dom(trees())
+    tok = scan_tokens_from_dom(trees())
     if not scanned:
         return out
     layout = "dynamic" if layout == "auto" else layout  # run.py default layout
     n_docs = len(scanned)
-    for d, exc in errors.items():
-        out[scanned[d]] = exc
     t_at = np.searchsorted(tok.doc, np.arange(n_docs + 1)).tolist()
     lines = build_lines(tok)
     l_at = np.searchsorted(lines.doc, np.arange(n_docs + 1)).tolist()
@@ -188,8 +186,6 @@ def _extract_layout(layout: str, reqs: List[Request]) -> List[Union[ExtractResul
     live: List[Tuple[int, int, dict]] = []  # (doc, request index, result base)
     for d, i in enumerate(scanned):
         n_tokens = t_at[d + 1] - t_at[d]
-        if d in errors:
-            continue
         if n_tokens == 0:
             # main.py:100-103 -> BOM-only file
             out[i] = ExtractResult(layout=layout, csv=empty_csv_bytes(), is_hocr=True)

@@ -32,7 +32,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 from html.parser import HTMLParser
-from typing import Dict, Iterable, List, Optional, Tuple
+from typing import Iterable, List, Optional, Tuple
 from xml.etree import ElementTree as ET
 
 import numpy as np
@@ -106,14 +106,6 @@ class TokenArrays:
         o = np.empty(0, dtype=object)
         i = np.empty(0, dtype=np.int64)
         return TokenArrays(o, i, i, i, i, i, o, i)
-
-    @staticmethod
-    def concat(parts: List["TokenArrays"]) -> "TokenArrays":
-        if not parts:
-            return TokenArrays.empty()
-        return TokenArrays(*(np.concatenate(c) for c in zip(*(
-            (t.text, t.page, t.x1, t.y1, t.x2, t.y2, t.line_id, t.doc) for t in parts
-        ))))
 
 
 # --------------------------------------------------------------------------
@@ -236,10 +228,7 @@ def scan_tokens(
     root, is_hocr = parse_dom(html)
     if not is_hocr:
         return TokenArrays.empty()
-    tok, errors = scan_tokens_from_dom([(root, table_bbox)])
-    if errors:
-        raise errors[0]
-    return tok
+    return scan_tokens_from_dom([(root, table_bbox)])
 
 
 @dataclass
@@ -291,16 +280,6 @@ class _Walk:
         self.crops.append(table_bbox)
         self.word_ends.append(len(texts))
         self.line_ends.append(len(line_ids))
-
-    def document(self, d: int) -> "_Walk":
-        w0, w1 = (self.word_ends[d - 1] if d else 0), self.word_ends[d]
-        l0, l1 = (self.line_ends[d - 1] if d else 0), self.line_ends[d]
-        return _Walk(
-            self.texts[w0:w1], self.word_titles[w0:w1],
-            self.line_ids[l0:l1], self.line_titles[l0:l1],
-            [(0, p, nw, nl) for doc, p, nw, nl in self.pages if doc == d],
-            [self.crops[d]], [w1 - w0], [l1 - l0],
-        )
 
 
 def _joined(titles: List[str]) -> str:
@@ -372,11 +351,9 @@ def _first_containing(
 ) -> np.ndarray:
     """Index of the first column of ``lines`` in ``[lo, hi)`` whose box
     contains each column of ``words`` (inclusive edges), -1 when none; both
-    are (4, n) box tables.  The word-line pairs are tested in chunks of about
-    ``_CONTAIN_CELLS``: a chunk whose words share one candidate range (one
-    page) is a dense words x lines test, any other chunk tests its listed
-    pairs, the y extent first.  A giant page never allocates the full
-    matrix."""
+    are (4, n) box tables.  The listed word-line pairs are tested in chunks
+    of about ``_CONTAIN_CELLS``, the y extent first, so a giant page never
+    allocates its full words x lines matrix."""
     n = words.shape[1]
     out = np.full(n, -1, dtype=np.int64)
     cnt = hi - lo
@@ -385,26 +362,16 @@ def _first_containing(
     while s < n:
         base = int(ends[s] - cnt[s])
         e = max(s + 1, int(np.searchsorted(ends, base + _CONTAIN_CELLS, side="right")))
-        a, b = int(lo[s]), int(hi[s])
-        if a == lo[e - 1] and b == hi[e - 1]:
-            if b > a:
-                W = words[:, s:e, None]
-                L = lines[:, None, a:b]
-                inside = (W[0] >= L[0]) & (W[1] >= L[1]) & (W[2] <= L[2]) & (W[3] <= L[3])
-                first = inside.argmax(axis=1)
-                hit = inside[np.arange(len(first)), first]
-                out[s:e] = np.where(hit, a + first, -1)
-        else:
-            c = cnt[s:e]
-            w = np.repeat(np.arange(s, e), c)
-            li = np.arange(len(w)) + np.repeat(lo[s:e] - (ends[s:e] - c - base), c)
-            y_in = np.flatnonzero((words[1][w] >= lines[1][li]) & (words[3][w] <= lines[3][li]))
-            w, li = w[y_in], li[y_in]
-            x_in = np.flatnonzero((words[0][w] >= lines[0][li]) & (words[2][w] <= lines[2][li]))
-            if x_in.size:
-                w, li = w[x_in], li[x_in]
-                first = np.flatnonzero(np.concatenate(([True], w[1:] != w[:-1])))
-                out[w[first]] = li[first]
+        c = cnt[s:e]
+        w = np.repeat(np.arange(s, e), c)
+        li = np.arange(len(w)) + np.repeat(lo[s:e] - (ends[s:e] - c - base), c)
+        y_in = np.flatnonzero((words[1][w] >= lines[1][li]) & (words[3][w] <= lines[3][li]))
+        w, li = w[y_in], li[y_in]
+        x_in = np.flatnonzero((words[0][w] >= lines[0][li]) & (words[2][w] <= lines[2][li]))
+        if x_in.size:
+            w, li = w[x_in], li[x_in]
+            first = np.flatnonzero(np.concatenate(([True], w[1:] != w[:-1])))
+            out[w[first]] = li[first]
         s = e
     return out
 
@@ -418,9 +385,9 @@ def _tokens(walk: _Walk) -> TokenArrays:
     text = np.asarray(walk.texts, dtype=object)
     keep = (text != "") & wvalid
     for d, crop in enumerate(walk.crops):
-        if crop is not None:
+        a, b = (walk.word_ends[d - 1] if d else 0), walk.word_ends[d]
+        if crop is not None and b > a:  # a document without words never reads its crop
             X1, Y1, X2, Y2 = crop
-            a, b = (walk.word_ends[d - 1] if d else 0), walk.word_ends[d]
             keep[a:b] &= (
                 (wb[a:b, 0] >= X1) & (wb[a:b, 1] >= Y1) & (wb[a:b, 2] <= X2) & (wb[a:b, 3] <= Y2)
             )
@@ -459,32 +426,14 @@ def _tokens(walk: _Walk) -> TokenArrays:
 
 def scan_tokens_from_dom(
     docs: Iterable[Tuple[object, Optional[Tuple[int, int, int, int]]]],
-) -> Tuple[TokenArrays, Dict[int, Exception]]:
+) -> TokenArrays:
     """Token scan of a batch: ``docs`` yields (root, table_bbox) per
     document; each tree is walked once and can be dropped before the next is
     made.  The bboxes, the crop and blank-text drop and the word->line
-    containment then run once over the batch's arrays.
-
-    Returns the batch's token table and, per document index, the error of a
-    document whose kept token has a coordinate beyond int64 (the batch is
-    then re-scanned one document at a time, so no other document loses its
-    tokens)."""
+    containment then run once over the batch's arrays.  A kept token with a
+    coordinate beyond int64 raises OverflowError."""
     walk = _Walk()
     for doc in docs:
         walk.add(*doc)
         del doc  # the tree goes before the next document is parsed
-    try:
-        return _tokens(walk), {}
-    except OverflowError as exc:
-        if len(walk.crops) == 1:
-            return TokenArrays.empty(), {0: exc}
-    parts, errors = [], {}
-    for d in range(len(walk.crops)):
-        try:
-            tok = _tokens(walk.document(d))
-        except OverflowError as exc:
-            errors[d] = exc
-            continue
-        tok.doc[:] = d
-        parts.append(tok)
-    return TokenArrays.concat(parts), errors
+    return _tokens(walk)

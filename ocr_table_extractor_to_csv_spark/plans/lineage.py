@@ -5,12 +5,17 @@ TaskContext; the manifest is then a plain distributed aggregation over the
 extracted table — no driver-side loops, no side channels, and it holds at
 any scale because it is just a groupBy:
 
-  manifests([pass,] partition_id, n_urls, n_ok, n_failed, total_html_bytes,
+  manifests(pass, partition_id, n_urls, n_ok, n_failed, total_html_bytes,
             total_csv_bytes, failed_urls[<=20 sample], max_task_attempt)
 
 A committed job frame carries ``pass`` (small / giant): each pass numbers
-its partitions from 0, so the manifest is keyed by (pass, partition_id)
-there, one row per task that wrote output.
+its partitions from 0, so the manifest is keyed by (pass, partition_id),
+one row per task that wrote output.  A frame without ``pass`` (one
+extraction pass, e.g. a streaming micro-batch) gets a null ``pass``, so
+every manifest has the same columns.  Manifest directories appended to
+before ``pass`` existed hold files without it: read them with
+``spark.read.option("mergeSchema", "true").parquet(...)`` (old rows then
+read ``pass`` as null).
 
 Invariant checked by tests: sum(n_urls) over manifests == count(pages in).
 """
@@ -22,8 +27,9 @@ from pyspark.sql import functions as F
 
 
 def build_manifests(extracted: DataFrame, failed_sample: int = 20) -> DataFrame:
-    keys = (["pass"] if "pass" in extracted.columns else []) + ["partition_id"]
-    return extracted.groupBy(*keys).agg(
+    if "pass" not in extracted.columns:
+        extracted = extracted.withColumn("pass", F.lit(None).cast("string"))
+    return extracted.groupBy("pass", "partition_id").agg(
         F.count("*").alias("n_urls"),
         F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("n_ok"),
         F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_failed"),

@@ -16,6 +16,7 @@ import random
 import pyarrow as pa
 import pytest
 
+from ocr_table_extractor_to_csv_spark.kernel import extract as extract_mod
 from ocr_table_extractor_to_csv_spark.kernel.extract import (
     ExtractResult,
     extract_document,
@@ -125,16 +126,31 @@ def _mixed_batches(seed, n_batches):
 
 
 @pytest.mark.parametrize("seed", range(6))
-def test_batch_equals_each_document_alone(seed):
-    errors = 0
+def test_batch_equals_each_document_alone(seed, monkeypatch):
+    # count the batch passes: a batch re-runs one document at a time only
+    # when a shared pass raised, which a batch of documents that all succeed
+    # alone must never do (else a broken batch path would hide behind the
+    # per-document re-run)
+    calls = []
+    batch_pass = extract_mod._extract_batch
+    monkeypatch.setattr(
+        extract_mod, "_extract_batch", lambda reqs: calls.append(len(reqs)) or batch_pass(reqs)
+    )
+    errors = batched = 0
     for docs in _mixed_batches(seed, 40):
+        calls.clear()
         got = extract_documents(docs)
+        passes = list(calls)
         assert len(got) == len(docs)
-        for doc, res in zip(docs, got):
-            want = _alone(*doc)
+        wants = [_alone(*doc) for doc in docs]
+        for doc, res, want in zip(docs, got, wants):
             assert dataclasses.asdict(res) == dataclasses.asdict(want), doc[1:]
             errors += res.error is not None
+        if all(w.error is None for w in wants):
+            assert passes == [len(docs)], "a batch of good documents was re-run"
+            batched += len(docs) > 1
     assert errors  # the mix does hold failing documents
+    assert batched  # and batches of several good documents
 
 
 def _page(*words, line=None):

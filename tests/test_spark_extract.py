@@ -169,6 +169,9 @@ def test_giant_pass_conf_isolated(spark, tmp_path, monkeypatch):
 def test_lineage_manifest_accounts_for_all_rows(spark, pages):
     extracted = extract_pages(pages, per_row_dispatch=True).cache()
     manifests = build_manifests(extracted)
+    # one column set for every writer: a frame without ``pass`` reads null
+    assert manifests.columns[:2] == ["pass", "partition_id"]
+    assert manifests.where(F.col("pass").isNotNull()).count() == 0
     totals = manifests.agg(
         F.sum("n_urls").alias("urls"),
         F.sum("n_ok").alias("ok"),
