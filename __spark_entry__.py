@@ -60,19 +60,23 @@ _FAN_MAX_BYTES = 256 * 1024 * 1024
 
 
 def _table_bytes(sf_dir: str, table: str) -> int:
+    """Bytes of ``<sf_dir>/<table>.parquet``.  A missing local table raises
+    FileNotFoundError here, at build time; a table behind a non-local
+    scheme (object store, HDFS) has no cheap size and counts as big."""
     import os
+    from urllib.parse import urlparse
 
-    p = os.path.join(sf_dir, f"{table}.parquet")
+    url = urlparse(sf_dir)
+    if url.scheme not in ("", "file"):
+        return _FAN_MAX_BYTES + 1
+    p = os.path.join(url.path if url.scheme else sf_dir, f"{table}.parquet")
     if os.path.isdir(p):
         return sum(
             os.path.getsize(os.path.join(root, f))
             for root, _, files in os.walk(p)
             for f in files
         )
-    try:
-        return os.path.getsize(p)
-    except OSError:
-        return _FAN_MAX_BYTES + 1  # unknown (e.g. object store): assume big
+    return os.path.getsize(p)
 
 
 def _fan(df: DataFrame, spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -1067,7 +1071,7 @@ def q_mix_sample(spark, sf_dir):
     target per source.  The plan broadcasts; the doc side never
     shuffles."""
     return textstats.mix_sample(
-        _docs_f(spark, sf_dir), budget_tokens=MIX_BUDGET, weights=MIX_WEIGHTS
+        _docs(spark, sf_dir), budget_tokens=MIX_BUDGET, weights=MIX_WEIGHTS
     )
 
 

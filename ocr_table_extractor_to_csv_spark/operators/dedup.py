@@ -19,6 +19,9 @@ Shared hash spec: h_seed(s) = int(substr(md5(s || '#' || seed), 1, 15), 16)
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -140,27 +143,68 @@ def minhash_signatures(documents: DataFrame, n: int = 3, k: int = N_MINHASH) -> 
     )
 
 
+def _explode_bands(
+    frame: DataFrame, carry: list, keys: list, names: tuple, alias: str = "bk"
+) -> DataFrame:
+    """(*carry, band, key) — one row per (row of ``frame``, band), band
+    ``b`` keyed by the column ``keys[b]``; ``names`` are the band and key
+    output columns and ``alias`` the exploded struct's name.  The ONE band
+    explode under ``lsh_bands``, ``simhash_bands`` and
+    ``similarity.lsh_bands_multi``."""
+    band, key = names
+    structs = [F.struct(F.lit(b).alias(band), k.alias(key)) for b, k in enumerate(keys)]
+    return frame.select(*carry, F.explode(F.array(*structs)).alias(alias)).select(
+        *carry, F.col(f"{alias}.{band}").alias(band), F.col(f"{alias}.{key}").alias(key)
+    )
+
+
+def _band_pairs(bands: DataFrame, on: list, id_col: str, max_bucket: int) -> DataFrame:
+    """Banded candidate pairs: ``bands`` self-joined (aliased ``a`` and
+    ``b``) on the ``on`` columns with ``a.<id_col> < b.<id_col>``, after
+    dropping every row whose bucket (the ``on`` tuple) holds more than
+    ``max_bucket`` members; callers select from ``a``/``b``.
+
+    The cap guards the 100 TB failure mode: a bucket with M members emits
+    M(M-1)/2 pairs, and boilerplate-heavy corpora create giant buckets
+    exactly where dedup matters.  A capped bucket is skipped in its own
+    band only (near-dups still link through less crowded bands, identical
+    texts collapse via ``exact_dedup``); the DuckDB oracles mirror it and
+    ``_bucket_stats`` reports what it drops.  It is a groupBy + join-back,
+    NOT ``count(*) OVER (PARTITION BY on)``: a 10^8-member bucket would
+    have to materialize inside ONE unsplittable window task, while the
+    groupBy combines map-side and the join is AQE-skew-splittable (r5
+    verdict #2).  The four references to ``bands`` stay lazy: ReuseExchange
+    dedupes the identical band subtrees behind one shuffle, and pinning
+    the frame under them measured 1.4-2x SLOWER at sf0.1 (r7 A/B)."""
+    sizes = bands.groupBy(*on).agg(F.count("*").alias("_bsz"))
+    capped = bands.join(sizes.where(F.col("_bsz") <= max_bucket).drop("_bsz"), on)
+    a, b = capped.alias("a"), capped.alias("b")
+    same = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in on]
+    return a.join(b, reduce(and_, same + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")]))
+
+
+def _bucket_stats(bands: DataFrame, on: list, max_bucket: int) -> DataFrame:
+    """(band, n_buckets, n_docs, n_hot_buckets, n_docs_in_hot) per band
+    ``on[0]`` of the buckets ``on``: how much ``_band_pairs``' cap drops —
+    report it next to dedup output so capped coverage is never silent."""
+    hot = F.col("bsz") > max_bucket
+    per_bucket = bands.groupBy(*on).agg(F.count("*").alias("bsz"))
+    return per_bucket.groupBy(on[0]).agg(
+        F.count("*").alias("n_buckets"),
+        F.sum("bsz").alias("n_docs"),
+        F.sum(F.when(hot, 1).otherwise(0)).alias("n_hot_buckets"),
+        F.sum(F.when(hot, F.col("bsz")).otherwise(0)).alias("n_docs_in_hot"),
+    )
+
+
 def lsh_bands(
     documents: DataFrame, n: int = 3, k: int = N_MINHASH, band_size: int = BAND_SIZE
 ) -> DataFrame:
-    """(doc_id, band, bkey) — one row per (doc, band)."""
-    return _bands_of_sigs(minhash_signatures(documents, n, k), k, band_size)
-
-
-def _bands_of_sigs(sig: DataFrame, k: int, band_size: int) -> DataFrame:
-    """Band projection over an existing (doc_id, m0..m{k-1}) signature
-    frame — split out of ``lsh_bands`` so ``minhash_lsh_pairs`` can pin
-    the signatures once and derive every band reference from the pin."""
-    n_bands = k // band_size
-    band_cols = []
-    for b in range(n_bands):
-        key = F.md5(
-            F.concat_ws(",", *[F.col(f"m{b * band_size + j}").cast("string") for j in range(band_size)])
-        )
-        band_cols.append(F.struct(F.lit(b).alias("band"), key.alias("bkey")))
-    return sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
+    """(doc_id, band, bkey) — one row per (doc, band); bkey is the md5 of
+    the band's ``band_size`` signature values."""
+    sig = [F.col(f"m{i}").cast("string") for i in range(k // band_size * band_size)]
+    keys = [F.md5(F.concat_ws(",", *sig[b : b + band_size])) for b in range(0, len(sig), band_size)]
+    return _explode_bands(minhash_signatures(documents, n, k), ["doc_id"], keys, ("band", "bkey"))
 
 
 def lsh_bucket_stats(
@@ -170,43 +214,9 @@ def lsh_bucket_stats(
     band_size: int = BAND_SIZE,
     max_bucket: int = MAX_BUCKET,
 ) -> DataFrame:
-    """Per-band bucket accounting (how much the hot-bucket cap drops):
-    (band, n_buckets, n_docs, n_hot_buckets, n_docs_in_hot) — report this
-    next to dedup output so capped coverage is never silent."""
-    bands = lsh_bands(documents, n, k, band_size)
-    per_bucket = bands.groupBy("band", "bkey").agg(F.count("*").alias("bsz"))
-    return per_bucket.groupBy("band").agg(
-        F.count("*").alias("n_buckets"),
-        F.sum("bsz").alias("n_docs"),
-        F.sum(F.when(F.col("bsz") > max_bucket, 1).otherwise(0)).alias("n_hot_buckets"),
-        F.sum(F.when(F.col("bsz") > max_bucket, F.col("bsz")).otherwise(0)).alias(
-            "n_docs_in_hot"
-        ),
-    )
-
-
-def cap_hot_buckets(bands: DataFrame, keys: list, max_bucket: int) -> DataFrame:
-    """Drop every row whose bucket (the ``keys`` tuple) holds more than
-    ``max_bucket`` members — the ONE hot-bucket cap shared by
-    ``minhash_lsh_pairs``, ``simhash_pairs``, and
-    ``similarity.cosine_dup_pairs`` (r6 review: keep the three call sites
-    in lockstep).
-
-    Shape: groupBy(keys) + inner join-back against the small-bucket set —
-    NOT ``count(*) OVER (PARTITION BY keys)``: the 10^8-member bucket the
-    cap defends against would first have to materialize inside ONE
-    unsplittable window task, while the groupBy gets map-side partial
-    counts and the join is AQE-skew-splittable (r5 verdict #2).  Identical
-    semantics; the map-side band computation runs twice (cheap,
-    embarrassingly parallel) instead of persisting the exploded bands of
-    the whole corpus."""
-    small = (
-        bands.groupBy(*keys)
-        .agg(F.count("*").alias("_bsz"))
-        .where(F.col("_bsz") <= max_bucket)
-        .drop("_bsz")
-    )
-    return bands.join(small, keys)
+    """Per-band accounting of ``minhash_lsh_pairs``' hot-bucket cap (see
+    ``_bucket_stats``)."""
+    return _bucket_stats(lsh_bands(documents, n, k, band_size), ["band", "bkey"], max_bucket)
 
 
 def minhash_lsh_pairs(
@@ -216,37 +226,12 @@ def minhash_lsh_pairs(
     band_size: int = BAND_SIZE,
     max_bucket: int = MAX_BUCKET,
 ) -> DataFrame:
-    """Candidate near-dup pairs: docs sharing any LSH band bucket.
-
-    Hot-bucket guard (the 100 TB failure mode): a band bucket with M members
-    emits M(M-1)/2 pairs, and boilerplate-heavy corpora create giant buckets
-    exactly where dedup matters.  Buckets with > ``max_bucket`` docs are
-    SKIPPED in that band; truly identical texts still collapse via
-    ``exact_dedup``, and near-dup clusters bigger than the cap still link
-    through their less-crowded bands.  Use ``lsh_bucket_stats`` to report
-    what the cap dropped.  The DuckDB oracle mirrors the cap.  The cap
-    itself is the shared skew-safe ``cap_hot_buckets`` (see its docstring
-    for the groupBy-vs-window rationale).
-
-    Persist note (r7, interleaved A/B): persisting the signature frame to
-    avoid the four lazy references (cap count side, cap join-back, pair
-    sides a/b) was measured ~2x SLOWER at sf0.1 — ReuseExchange already
-    dedupes the identical band subtrees behind one shuffle, so the pin
-    only added a materialization job + cache traffic.  The recompute-free
-    shape is the Exchange reuse, not a cache.
-    """
-    bands = cap_hot_buckets(_bands_of_sigs(minhash_signatures(documents, n, k),
-                                           k, band_size),
-                            ["band", "bkey"], max_bucket)
-    a = bands.alias("a")
-    b = bands.alias("b")
+    """Candidate near-dup pairs (id_a, id_b): docs sharing any LSH band
+    bucket of at most ``max_bucket`` docs (``_band_pairs``; report
+    ``lsh_bucket_stats`` for what the cap dropped)."""
+    bands = lsh_bands(documents, n, k, band_size)
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_pairs(bands, ["band", "bkey"], "doc_id", max_bucket)
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
@@ -457,28 +442,13 @@ def simhash_bands(
     the key identical under arithmetic or logical shift semantics, so the
     sign bit of a 64-bit hash needs no special-casing in either engine.
     """
-    return _bands_of_simhash(simhash(documents, bits), max_hamming, bits)
-
-
-def _bands_of_simhash(
-    sh: DataFrame, max_hamming: int, bits: int
-) -> DataFrame:
-    """Pigeonhole band projection over an existing (doc_id, simhash)
-    frame — split out of ``simhash_bands`` so ``simhash_pairs`` can pin
-    the hashes once and derive every band reference from the pin."""
-    n_bands = max_hamming + 1
-    band_bits = bits // n_bands
+    band_bits = bits // (max_hamming + 1)
     mask = (1 << band_bits) - 1
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright(F.col("simhash"), band_bits * b).bitwiseAND(F.lit(mask)).alias("bkey"),
-        )
-        for b in range(n_bands)
+    keys = [
+        F.shiftright(F.col("simhash"), band_bits * b).bitwiseAND(F.lit(mask))
+        for b in range(max_hamming + 1)
     ]
-    return sh.select(
-        "doc_id", "simhash", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", "simhash", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
+    return _explode_bands(simhash(documents, bits), ["doc_id", "simhash"], keys, ("band", "bkey"))
 
 
 def simhash_bucket_stats(
@@ -487,20 +457,10 @@ def simhash_bucket_stats(
     bits: int = SIMHASH_BITS,
     max_bucket: int = SIMHASH_MAX_BUCKET,
 ) -> DataFrame:
-    """Per-band bucket accounting for the simhash pigeonhole bands — the
-    ``lsh_bucket_stats`` twin (r3 verdict #3): what ``simhash_pairs``'
-    hot-bucket cap drops must be driver-visible, never silent.
-    (band, n_buckets, n_docs, n_hot_buckets, n_docs_in_hot)."""
-    bands = simhash_bands(documents, max_hamming, bits)
-    per_bucket = bands.groupBy("band", "bkey").agg(F.count("*").alias("bsz"))
-    return per_bucket.groupBy("band").agg(
-        F.count("*").alias("n_buckets"),
-        F.sum("bsz").alias("n_docs"),
-        F.sum(F.when(F.col("bsz") > max_bucket, 1).otherwise(0)).alias("n_hot_buckets"),
-        F.sum(F.when(F.col("bsz") > max_bucket, F.col("bsz")).otherwise(0)).alias(
-            "n_docs_in_hot"
-        ),
-    )
+    """Per-band accounting of ``simhash_pairs``' hot-bucket cap (see
+    ``_bucket_stats``; r3 verdict #3: what the cap drops must be
+    driver-visible, never silent)."""
+    return _bucket_stats(simhash_bands(documents, max_hamming, bits), ["band", "bkey"], max_bucket)
 
 
 def simhash_pairs(
@@ -513,12 +473,10 @@ def simhash_pairs(
 
     Pigeonhole banding: split the hash into ``max_hamming + 1`` bands — two
     hashes within ``max_hamming`` bits MUST agree exactly on at least one
-    band, so candidates = same (band, key) pairs, confirmed by
-    ``bit_count(xor)``.  Recall is exact UP TO the hot-bucket cap (the only
-    probabilistic-free claim this operator makes): buckets above
-    ``max_bucket`` are skipped per band under the same no-silent-caps
-    contract as ``minhash_lsh_pairs`` — report ``simhash_bucket_stats``
-    alongside so the drop is visible.
+    band, so candidates = same (band, key) pairs (``_band_pairs``),
+    confirmed by ``bit_count(xor)``.  Recall is exact UP TO the hot-bucket
+    cap: buckets above ``max_bucket`` are skipped per band — report
+    ``simhash_bucket_stats`` alongside so the drop is visible.
 
     Scale note: band keys carry ``bits / (max_hamming + 1)`` bits.  The
     production configuration is ``bits=64`` => 16-bit band keys (65,536
@@ -526,25 +484,10 @@ def simhash_pairs(
     scale and survive only as the compact twin.  Both widths are bit-exact
     against the DuckDB oracle (signed-BIGINT xor / bit_count / shift
     agree across engines).
-
-    The cap is the shared skew-safe ``cap_hot_buckets`` (groupBy +
-    join-back, never a window over the hot bucket key).  Persist note:
-    same interleaved-A/B result as minhash_lsh_pairs — pinning the
-    (doc_id, simhash) frame measured ~1.8x slower than letting
-    ReuseExchange dedupe the band subtrees.
     """
-    bands = cap_hot_buckets(_bands_of_simhash(simhash(documents, bits),
-                                              max_hamming, bits),
-                            ["band", "bkey"], max_bucket)
-    a = bands.alias("a")
-    b2 = bands.alias("b")
+    bands = simhash_bands(documents, max_hamming, bits)
     cand = (
-        a.join(
-            b2,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_pairs(bands, ["band", "bkey"], "doc_id", max_bucket)
         .select(
             F.col("a.doc_id").alias("id_a"),
             F.col("b.doc_id").alias("id_b"),
@@ -982,29 +925,18 @@ def substring_dedup_pairs(
     """(id_a, id_b, n_shared) — document pairs sharing >= ``min_anchors``
     distinct content-defined anchors: exact-substring dup candidates.
 
-    Shape mirrors ``minhash_lsh_pairs``: anchors -> shared skew-safe
-    ``cap_hot_buckets`` on the anchor key (a boilerplate span present in
-    10^6 docs is a hot anchor; capped buckets are skipped, the span
-    still links through its rarer neighboring anchors) -> self-equi-join
-    on anchor -> groupBy pair counting shared anchors (per-doc anchors
-    are distinct, so count(*) IS the distinct-anchor count).  Pair
-    output is bounded by max_bucket^2 per anchor; requiring
+    The anchor is the band key (``_band_pairs`` on ``anchor``: a
+    boilerplate span present in 10^6 docs is a hot anchor; capped buckets
+    are skipped, the span still links through its rarer neighboring
+    anchors), then a groupBy pair counting shared anchors (per-doc
+    anchors are distinct, so count(*) IS the distinct-anchor count).
+    Pair output is bounded by max_bucket^2 per anchor; requiring
     ``min_anchors`` >= 2 suppresses single-gram coincidences.
     """
-    anch = cap_hot_buckets(
-        substring_anchors(documents, k, anchor_mod), ["anchor"], max_bucket
-    )
-    a = anch.alias("a")
-    b = anch.alias("b")
+    anchors = substring_anchors(documents, k, anchor_mod)
     return (
-        a.join(
-            b,
-            (F.col("a.anchor") == F.col("b.anchor"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
+        _band_pairs(anchors, ["anchor"], "doc_id", max_bucket)
+        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(F.count("*").cast("int").alias("n_shared"))
         .where(F.col("n_shared") >= min_anchors)
     )

@@ -65,8 +65,9 @@ def _sample_frames(payload: bytes, k: int) -> tuple[List[int], List[int]]:
 def media_features(media: DataFrame, kind_col: str = "kind") -> DataFrame:
     """media(media_id, kind, payload BINARY) -> feature rows.
 
-    One mapInArrow stage; batches are bounded by Arrow maxRecordsPerBatch —
-    size media partitions with plans.partitioning just like html pages.
+    One mapInArrow stage; a batch closes at Arrow maxRecordsPerBatch rows or
+    maxBytesPerBatch bytes, whichever comes first (``session.DEFAULT_CONF``),
+    so large payloads arrive in small batches just like giant html pages.
     """
 
     def fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _band_pairs, _explode_bands
+
 SIM_ROUND = 4
 
 
@@ -449,7 +451,7 @@ def semdedup(
     knob, exactly as its GPU implementation batches per cluster); the
     join is a plain sort-merge on cid, so AQE skew-join splitting covers
     an unbalanced cluster.  The assignment projection is re-derived per
-    plan branch (3 column-pruned scans — map-only, the cap_hot_buckets
+    plan branch (3 column-pruned scans — map-only, the ``dedup._band_pairs``
     trade: recompute cheap map work rather than persist the corpus); at
     100 TB write it to a landing table first and semdedup the result.
     Returns (vec_id, cid, is_keeper) ordered by vec_id.
@@ -677,27 +679,9 @@ def lsh_bands_multi(
     dim: int = DEFAULT_DIM,
 ) -> DataFrame:
     """(vec_id, table, bucket) band list from the single-pass sketch."""
-    return _bands_of_sketch(
-        multi_table_sketch(embeddings, n_planes, n_tables, dim), n_tables
-    )
-
-
-def _bands_of_sketch(sk: DataFrame, n_tables: int) -> DataFrame:
-    """Band explode over an existing (vec_id, b0..b{n_tables-1}) sketch
-    frame — split out so callers that reference the band list from several
-    plan branches can pin the sketch once (the 48 literal-weight
-    projections under it are the expensive part)."""
-    return sk.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(t).alias("table"), F.col(f"b{t}").alias("bucket"))
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("tb"),
-    ).select("vec_id", F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"))
+    sketch = multi_table_sketch(embeddings, n_planes, n_tables, dim)
+    keys = [F.col(f"b{t}") for t in range(n_tables)]
+    return _explode_bands(sketch, ["vec_id"], keys, ("table", "bucket"), alias="tb")
 
 
 def cosine_dup_pairs(
@@ -709,35 +693,13 @@ def cosine_dup_pairs(
     max_bucket: int = 256,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the dedup-by-embedding path):
-    candidate pairs share any LSH (table, bucket); exact cosine >= threshold
-    confirms.  Never all-pairs — the same banded candidate join as
-    ``lsh_topk`` — and buckets with > ``max_bucket`` members are skipped per
-    band (hot-bucket guard, same rationale as dedup.minhash_lsh_pairs; the
-    cap is the shared skew-safe ``dedup.cap_hot_buckets`` — groupBy +
-    join-back, never a window over the hot bucket key).  Missed duplicates
-    are the LSH recall tradeoff; raise n_tables to trade compute for
-    recall.
-
-    Persist note (r7, interleaved A/B): pinning the sketch frame to avoid
-    the four lazy band references measured ~1.4x SLOWER at sf0.1 —
-    ReuseExchange dedupes the identical band subtrees behind one shuffle,
-    so the hyperplane projections run once per distinct exchange, not
-    once per reference."""
-    from .dedup import cap_hot_buckets
-
-    bands = cap_hot_buckets(
-        lsh_bands_multi(embeddings, n_planes, n_tables, dim),
-        ["table", "bucket"], max_bucket,
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
+    candidate pairs share any LSH (table, bucket) of at most ``max_bucket``
+    members (``dedup._band_pairs``); exact cosine >= threshold confirms.
+    Missed duplicates are the LSH recall tradeoff; raise n_tables to trade
+    compute for recall."""
+    bands = lsh_bands_multi(embeddings, n_planes, n_tables, dim)
     pairs = (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
+        _band_pairs(bands, ["table", "bucket"], "vec_id", max_bucket)
         .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
         .distinct()
     )

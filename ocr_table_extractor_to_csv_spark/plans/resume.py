@@ -14,8 +14,8 @@ Batch protocol (exactly-once at the batch granularity, SURVEY.md §4.2):
 
 On Iceberg the same protocol maps to ``overwritePartitions()`` + a snapshot
 commit; here the warehouse is parquet directories (no Iceberg runtime jar in
-this sandbox) with identical semantics via
-``spark.sql.sources.partitionOverwriteMode=dynamic``.
+this sandbox) with identical semantics via the ``partitionOverwriteMode=dynamic`` writer
+option.
 """
 
 from __future__ import annotations
@@ -49,9 +49,9 @@ def write_batch(
 
     Dynamic partition overwrite on ``(batch_id, pass)`` replaces exactly this
     pass's partition on a re-run, which lets the small-doc and giant-doc
-    passes commit as SEPARATE actions — each executing under its own Arrow
-    batch-size conf (the r01 giants-conf leak fix) — without a re-run ever
-    duplicating rows of either pass.
+    passes commit as SEPARATE actions without a re-run ever duplicating
+    rows of either pass.  The mode is a writer option, so the session conf
+    is never changed.
 
     Layout note: ``extracted_path`` is partitioned (batch_id, pass); a
     directory written by a pre-``pass`` version of this engine has a
@@ -59,13 +59,12 @@ def write_batch(
     fresh root (Spark fails loudly with "conflicting directory structures"
     otherwise).
     """
-    spark = extracted.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     stamped = extracted.withColumn("batch_id", F.lit(batch_id)).withColumn(
         "pass", F.lit(sub)
     )
     (
         stamped.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id", "pass")
         .parquet(extracted_path)
     )

@@ -18,10 +18,13 @@ DEFAULT_CONF = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # bounds per-worker memory (rows x avg doc size per batch); 256 measured
-    # ~20% faster than 64 on ~3-100KB pages. Giant pages must NOT go through
-    # this default — isolate_giants runs them with maxRecordsPerBatch=4.
+    # bound per-worker memory: a batch closes at 256 rows or 32 MiB, whichever
+    # comes first.  256 rows measured ~20% faster than 64 on ~3-100KB pages
+    # (such batches stay far below 32 MiB); the byte bound is what keeps a
+    # batch of giant pages small — 32 MiB is 4 pages at extract_job's default
+    # 8 MiB giant threshold — so no pass has to change the row count.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(32 * 1024 * 1024),
     "spark.sql.execution.arrow.pyspark.selfDestruct.enabled": "true",
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.parquet.compression.codec": "zstd",

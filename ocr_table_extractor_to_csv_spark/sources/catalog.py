@@ -64,5 +64,9 @@ class Catalog:
         if self._iceberg:
             df.writeTo(f"{self.catalog_name}.{table}").overwritePartitions()
         else:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            df.write.mode("overwrite").partitionBy(partition_col).parquet(self._path(table))
+            (
+                df.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(partition_col)
+                .parquet(self._path(table))
+            )

@@ -118,6 +118,70 @@ def test_minhash_hot_bucket_capped(spark):
     assert all(s.n_docs_in_hot == 1000 for s in stats.values())
 
 
+def _band_table(seed: int, cap: int) -> list:
+    """(doc_id, band, bkey) rows: random keys over few buckets, plus a hot
+    bucket in band 0 only whose docs still meet in band 1, a pair sharing
+    two bands, and a repeated (doc, band) row (equal ids in one bucket)."""
+    import random
+
+    rng = random.Random(seed)
+    key = {(d, b): rng.randrange(6) for d in range(30) for b in range(3)}
+    key.update({(d, 0): 99 for d in range(cap + 2)})
+    key.update({(0, 1): 98, (1, 1): 98})
+    key.update({(10, 1): 50, (11, 1): 50, (10, 2): 51, (11, 2): 51})
+    rows = [(d, b, k) for (d, b), k in sorted(key.items())]
+    return rows + [(12, 2, key[12, 2])]
+
+
+def test_band_pairs_and_bucket_stats_match_brute_force(spark):
+    """``_band_pairs`` emits one row per (pair, shared band) for every two
+    distinct ids sharing a key in a band whose bucket holds <= cap members,
+    and ``_bucket_stats`` counts exactly the buckets it drops — checked
+    against a Python reference, with two-column and one-column keys."""
+    from collections import Counter
+
+    cap = 4
+    for seed in range(3):
+        rows = _band_table(seed, cap)
+        buckets = {}
+        for d, b, k in rows:
+            buckets.setdefault((b, k), []).append(d)
+        assert len(buckets[0, 99]) > cap and len(buckets[1, 98]) <= cap
+        want = sorted(
+            (x, y)
+            for ids in buckets.values()
+            if len(ids) <= cap
+            for x in ids
+            for y in ids
+            if x < y
+        )
+        assert Counter(want)[10, 11] == 2 and (0, 1) in want
+
+        bands = spark.createDataFrame(rows, "doc_id long, band int, bkey long")
+        got = dedup._band_pairs(bands, ["band", "bkey"], "doc_id", cap).select(
+            "a.doc_id", "b.doc_id"
+        )
+        assert sorted(map(tuple, got.collect())) == want
+        anchors = bands.select(
+            F.col("doc_id").alias("vec_id"), F.concat_ws(":", "band", "bkey").alias("anchor")
+        )
+        got = dedup._band_pairs(anchors, ["anchor"], "vec_id", cap).select(
+            "a.vec_id", "b.vec_id"
+        )
+        assert sorted(map(tuple, got.collect())) == want
+
+        stats = {
+            r.band: tuple(r)[1:]
+            for r in dedup._bucket_stats(bands, ["band", "bkey"], cap).collect()
+        }
+        ref = {}
+        for (b, _k), ids in buckets.items():
+            n, hot = len(ids), len(ids) > cap
+            nb, nd, nh, ndh = ref.get(b, (0, 0, 0, 0))
+            ref[b] = (nb + 1, nd + n, nh + hot, ndh + n * hot)
+        assert stats == ref
+
+
 def test_connected_components_long_path_and_cycle(spark):
     """The convergence loop must handle diameters far beyond the clique-ish
     typical case: a 15-node path (diameter 14), a 3-cycle, and singletons."""

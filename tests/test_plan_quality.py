@@ -494,6 +494,24 @@ def test_quality_classifier_broadcasts_model(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_table_bytes_missing_local_table_raises(tmp_path):
+    """The fan-out's size probe reads local tables (plain or ``file:``
+    paths) and raises for a missing one, so a misconfigured sf_dir fails
+    at build time; only a non-local scheme counts as big unseen."""
+    import __spark_entry__ as entry_mod
+
+    table = tmp_path / "documents.parquet"
+    table.mkdir()
+    (table / "part-0.parquet").write_bytes(b"x" * 10)
+    assert entry_mod._table_bytes(str(tmp_path), "documents") == 10
+    assert entry_mod._table_bytes(f"file://{tmp_path}", "documents") == 10
+    with pytest.raises(FileNotFoundError):
+        entry_mod._table_bytes(str(tmp_path), "events")
+    with pytest.raises(FileNotFoundError):
+        entry_mod._table_bytes(f"file://{tmp_path}/missing", "documents")
+    assert entry_mod._table_bytes("s3a://bucket/sf", "documents") > entry_mod._FAN_MAX_BYTES
+
+
 def test_mix_sample_plan_broadcasts_to_corpus(spark):
     """mix_sample's per-source plan (bounded rows) must reach the corpus
     scan as a BROADCAST join — the doc side never shuffles for the join

@@ -6,6 +6,7 @@ import hashlib
 import json
 from pathlib import Path
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -63,9 +64,9 @@ def test_partitioning_is_content_neutral(spark, pages):
 
 def test_arrow_batch_size_is_content_neutral(spark, pages):
     """The kernel must be stateless across Arrow batch boundaries: running
-    the giants-pass batch size (4) over the whole corpus yields byte-
-    identical output to the default (256) — the invariant that makes the
-    two-pass small/giant split safe."""
+    4-row batches (what the byte bound gives giant pages) over the whole
+    corpus yields byte-identical output to the default (256) — the
+    invariant that makes the two-pass small/giant split safe."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     base = {
         r.url: sha(bytes(r.csv))
@@ -123,11 +124,18 @@ def test_resume_anti_join_and_idempotent_commit(spark, pages, tmp_path):
 
 
 def test_giant_pass_conf_isolated(spark, tmp_path, monkeypatch):
-    """r01 verdict #2: the giant pass's maxRecordsPerBatch=4 must NOT leak
-    into the small pass (the old lazy-union ran both passes at 4), and the
-    session conf must be restored afterwards."""
+    """No package code changes session conf at run time: ``run_extract``
+    runs both passes at the session's 256 rows per batch, the giants are
+    kept small by the Arrow byte bound instead, and ``write_batch`` and the
+    catalog's partition overwrite pass dynamic overwrite as a writer
+    option."""
     import jobs.extract_job as ej
+    from ocr_table_extractor_to_csv_spark.plans.resume import write_batch
+    from ocr_table_extractor_to_csv_spark.sources.catalog import Catalog
+    from ocr_table_extractor_to_csv_spark.sources.fixtures import generate_corpus
 
+    rows_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    bytes_key = "spark.sql.execution.arrow.maxBytesPerBatch"
     pages = fixture_pages(spark, scale=0.2, giant_tokens=3000).select(
         "url", "html", "layout", "args"
     )
@@ -135,35 +143,69 @@ def test_giant_pass_conf_isolated(spark, tmp_path, monkeypatch):
     real = ej.write_batch
 
     def spy(extracted, batch_id, path, sub="all"):
-        seen.append(
-            (
-                sub,
-                extracted.sparkSession.conf.get(
-                    "spark.sql.execution.arrow.maxRecordsPerBatch"
-                ),
-            )
-        )
+        seen.append((sub, extracted.sparkSession.conf.get(rows_key)))
         real(extracted, batch_id, path, sub=sub)
 
     monkeypatch.setattr(ej, "write_batch", spy)
-    committed = ej.run_extract(
-        spark,
-        pages,
-        out=str(tmp_path / "out"),
-        progress_path=str(tmp_path / "prog"),
-        batch_id=0,
-        per_row_dispatch=True,
-        giant_threshold=50_000,
-    )
-    confs = dict(seen)
-    assert confs["small"] == "256", "small pass must run at the fast batch size"
-    assert confs["giant"] == "4", "giant pass must run memory-bounded"
-    assert (
-        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "256"
-    ), "conf must be restored"
-    by_pass = {r["pass"]: r["n"] for r in committed.groupBy("pass").agg(F.count("*").alias("n")).collect()}
-    assert by_pass.get("giant", 0) >= 1, "fixture giants must exercise the giant pass"
-    assert committed.select("url").distinct().count() == pages.count()
+    # a static session: a writer that set dynamic mode on the session would
+    # show in the conf, one that set nothing would overwrite every partition
+    overwrite_key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(overwrite_key, "static")
+    before = spark.conf.getAll
+    try:
+        committed = ej.run_extract(
+            spark,
+            pages,
+            out=str(tmp_path / "out"),
+            progress_path=str(tmp_path / "prog"),
+            batch_id=0,
+            per_row_dispatch=True,
+            giant_threshold=50_000,
+        )
+        assert spark.conf.getAll == before, "run_extract must not change session conf"
+        assert dict(seen) == {"small": "256", "giant": "256"}
+        by_pass = {
+            r["pass"]: r["n"]
+            for r in committed.groupBy("pass").agg(F.count("*").alias("n")).collect()
+        }
+        assert by_pass.get("giant", 0) >= 1, "fixture giants must exercise the giant pass"
+        assert committed.select("url").distinct().count() == pages.count()
+
+        # the writers' dynamic overwrite: a second partition keeps the first
+        small = pages.where(F.length("html") < 2000).select("url")
+        write_batch(small, 1, str(tmp_path / "wb"), sub="a")
+        write_batch(small, 1, str(tmp_path / "wb"), sub="b")
+        assert spark.read.parquet(str(tmp_path / "wb")).count() == 2 * small.count()
+        cat = Catalog(spark, str(tmp_path / "wh"))
+        cat.overwrite_partition(small.withColumn("p", F.lit(0)), "t", "p")
+        cat.overwrite_partition(small.withColumn("p", F.lit(1)), "t", "p")
+        assert cat.read("t").count() == 2 * small.count()
+        assert spark.conf.getAll == before, "the writers must not change session conf"
+    finally:
+        spark.conf.unset(overwrite_key)
+
+    # the byte bound closes a batch of giants: at 1 MiB no batch holds more
+    # than the bound plus one row
+    giants = spark.createDataFrame(
+        [(r["url"], r["html"]) for r in generate_corpus(families=["giant"], giant_tokens=8000)],
+        "url string, html binary",
+    ).coalesce(1)
+
+    def batch_bytes(batches):
+        for b in batches:
+            sizes = [len(h) for h in b.column("html").to_pylist()]
+            yield pa.RecordBatch.from_pydict({"total": [sum(sizes)], "largest": [max(sizes)]})
+
+    bound = 1 << 20
+    prev = spark.conf.get(bytes_key)
+    spark.conf.set(bytes_key, str(bound))
+    try:
+        batches = giants.mapInArrow(batch_bytes, "total long, largest long").collect()
+    finally:
+        spark.conf.set(bytes_key, prev)
+    assert sum(b.total for b in batches) > bound, "the giants must exceed one bound"
+    assert len(batches) > 1
+    assert all(b.total <= bound + b.largest for b in batches), batches
 
 
 def test_lineage_manifest_accounts_for_all_rows(spark, pages):
